@@ -17,7 +17,11 @@ import org.apache.spark.sql.types._
   */
 object Pipeline {
 
-  case class LayerResult(layer: String, ok: Boolean, tables: Long, rows: Long, seconds: Double)
+  /** One layer's outcome; `error` is the failure's exception class,
+    * message and cause chain (None when the layer succeeded or never
+    * ran because an earlier layer failed). */
+  case class LayerResult(layer: String, ok: Boolean, tables: Long, rows: Long, seconds: Double,
+      error: Option[String] = None)
 
   def runBronze(spark: SparkSession, store: LayerStore, sfDir: String): LayerResult = timed("bronze") {
     // upsert-style loads (S2): testdata stands in for the Sheets
@@ -425,13 +429,14 @@ object Pipeline {
   /** Run `body` with a materializer that persists frames for the
     * duration of the call only (the query surface memoizes
     * session-lifetime instead; here the pin must not outlive the
-    * layer build). */
+    * layer build). Thread-safe: the backtest pins from its concurrent
+    * group threads. */
   private def withMaterializer[T](body: (DataFrame => DataFrame) => T): T = {
-    val persisted = collection.mutable.ArrayBuffer.empty[DataFrame]
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     def mat(df: DataFrame): DataFrame = {
-      val p = df.persist(); p.count(); persisted += p; p
+      val p = df.persist(); p.count(); persisted.add(p); p
     }
-    try body(mat) finally persisted.foreach(_.unpersist())
+    try body(mat) finally persisted.forEach(_.unpersist())
   }
 
   /** Gold layer build. `forecastModel`/`forecastGranularity` select
@@ -515,14 +520,24 @@ object Pipeline {
       LayerResult(layer, ok = true, tables, rows, (System.nanoTime() - t0) / 1e9)
     } catch {
       case e: Throwable =>
-        System.err.println(s"[pipeline] $layer failed: ${e.getMessage}")
-        LayerResult(layer, ok = false, 0, 0, (System.nanoTime() - t0) / 1e9)
+        System.err.println(s"[pipeline] $layer failed:")
+        e.printStackTrace() // stderr, with the "Caused by:" chain
+        LayerResult(layer, ok = false, 0, 0, (System.nanoTime() - t0) / 1e9,
+          Some(describe(e)))
     }
   }
 
+  /** "Class: message; caused by: Class: message; ..." over the cause
+    * chain (bounded, so a cyclic chain cannot loop). */
+  private def describe(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("; caused by: ")
+
   /** Full pipeline with layer gating; returns per-layer results and
     * appends the run to audit.etl_log (the reference's per-step
-    * in/out/duration accounting, silver/silver_builder.py:497-516). */
+    * in/out/duration accounting, silver/silver_builder.py:497-516),
+    * with a failed layer's exception and causes in its `error`
+    * column. */
   def run(spark: SparkSession, sfDir: String, outRoot: String,
       forecastModel: String = "global_ar",
       forecastGranularity: String = "auto"): Seq[LayerResult] = {
@@ -536,8 +551,8 @@ object Pipeline {
     val results = Seq(bronze, silver, gold)
     import spark.implicits._
     store.append("audit", "etl_log",
-      results.map(r => (r.layer, r.ok, r.tables, r.rows, r.seconds))
-        .toDF("layer", "ok", "tables", "rows", "seconds")
+      results.map(r => (r.layer, r.ok, r.tables, r.rows, r.seconds, r.error))
+        .toDF("layer", "ok", "tables", "rows", "seconds", "error")
         .withColumn("logged_at", org.apache.spark.sql.functions.current_timestamp()))
     results
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryModule
+import graft.util.Par
 import graft.util.Parity._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,12 +22,22 @@ import org.apache.spark.sql.types._
   * form, 0 when actual and forecast are both zero), both as exact
   * decimal folds so the numbers are cross-engine deterministic.
   *
+  * One builder, two scopes: `groupParts` is the only way a backtest
+  * group — one (granularity, level) series, its split, the shared fit
+  * and the scored parts — is built.
+  *  - The Pipeline (`metricsOverLevels`, gold.forecast_metrics) scores
+  *    BOTH granularities at EVERY level, over series derived from the
+  *    written silver tables.
+  *  - The query surface (`backtestMetrics`, q79 and its consumers)
+  *    scores weekly at every level plus daily at the supplier level,
+  *    over the memoized series artifacts — the scope its DuckDB oracle
+  *    (`metricsSql`) encodes.
+  *
   * Scale: the split is one tiny per-entity max-aggregation broadcast
-  * back against the (already materialized) series artifact — the
-  * series itself never shuffles for the split; each refit then costs
-  * what the production fit costs. The metrics join is
-  * forecast-vs-holdout, both derived frames keyed by entity — at most
-  * H rows per entity on either side.
+  * back against the (already materialized) series — the series itself
+  * never shuffles for the split; the per-entity models share one fit
+  * per group. The metrics join is forecast-vs-holdout, both derived
+  * frames keyed by entity — at most H rows per entity on either side.
   */
 object Backtest extends QueryModule {
 
@@ -50,49 +61,15 @@ object Backtest extends QueryModule {
   private def seasonPeriod(granularity: String): Int =
     if (granularity == "daily") 7 else 52
 
-  /** Split a dense (entity, dateCol, y) series at
-    * cutoff = max(date) − stepDays·h per entity. Returns (truncated
-    * series for refitting, held-out actuals). The cutoff frame is a
-    * per-entity scalar — broadcast, so the series scan stays narrow. */
-  private def split(series: DataFrame, dateCol: String, stepDays: Int,
-      h: Int): (DataFrame, DataFrame) = {
-    val cut = series.groupBy(col("entity"))
-      .agg(date_sub(max(col(dateCol)), stepDays * h).as("cutoff"))
-    val j = series.join(broadcast(cut), "entity")
-    (j.filter(col(dateCol) <= col("cutoff"))
-        .select(col("entity"), col(dateCol).as("week"), col("y")),
-      j.filter(col(dateCol) > col("cutoff"))
-        .select(col("entity"), col(dateCol).as("ds"), col("y")))
-  }
-
-  /** Refit `model` on the truncated series and score per entity.
-    * Per-entity models keep the reference's MIN_SERIES_LEN gate (on
-    * the TRUNCATED length — an entity must still have 14 points after
-    * the holdout is withheld, like a deployment scoring on history it
-    * actually has). global_ar scores the holdout-overlapping prefix of
-    * its fixed 7-step horizon (weekly: the first 4 of 7 steps).
-    *
-    * Error folds: yhat is snapRound'd scale-4, y is an exact series
-    * value, so |yhat−y| is within 1 ulp of a 4-dp rational — summing
-    * through DECIMAL(38,8) (4 guard digits) is exact and
-    * order-independent in both engines. The per-row sMAPE quotient is
-    * IEEE-identical cross-engine, snapped at scale 6, then folded the
-    * same way. */
-  private def metricsFor(series: DataFrame, dateCol: String, stepDays: Int,
-      h: Int, model: String, granularity: String, level: String): DataFrame = {
-    val (trunc, hold) = split(series, dateCol, stepDays, h)
-    metricsForSplit(trunc, hold, stepDays, h, model, granularity, level)
-  }
-
-  /** The per-model forecast frame over the truncated series,
-    * normalized to (entity_id, ds, yhat). `fit` is the group's one
+  /** The per-entity model forecast over the truncated series,
+    * normalized to (entity_id, ds, yhat, model). `fit` is the group's one
     * olsFit(trunc, minLen) frame: linear consumes it directly,
     * seasonal_trend skips its own fit pass, seasonal_naive reuses its
     * (entity, last_week) as the gate (olsFit applies the identical
     * count >= minLen filter). The FromFit/FromGate seams are what the
     * public models delegate to, so the arithmetic has one definition. */
-  private def fcFor(model: String, trunc: DataFrame, fit: => DataFrame,
-      stepDays: Int, h: Int, granularity: String, level: String): DataFrame =
+  private def entityFc(model: String, trunc: DataFrame, fit: DataFrame,
+      stepDays: Int, h: Int, granularity: String): DataFrame =
     (model match {
       case "linear" =>
         Forecast.forecastLinearFromFit(fit, stepDays, horizon = h)
@@ -102,12 +79,16 @@ object Backtest extends QueryModule {
       case "seasonal_trend" =>
         Forecast.forecastSeasonalTrendFromFit(trunc, fit, stepDays, horizon = h,
           period = seasonPeriod(granularity))
-      case "global_ar" =>
-        GlobalAR.globalArCore(
-          trunc.select(col("entity").as("entity"), col("week").as("ds"), col("y")),
-          stepDays, granularity, level)
-          .select(col("entity_id").as("entity"), col("ds"), col("yhat"))
-    }).select(col("entity").cast(StringType).as("entity_id"), col("ds"), col("yhat"))
+    }).select(col("entity").cast(StringType).as("entity_id"), col("ds"), col("yhat"),
+      lit(model).as("model"))
+
+  /** The pooled global_ar refit over the truncated series; it scores
+    * the holdout-overlapping prefix of its fixed 7-step horizon
+    * (weekly: the first 4 of 7 steps). */
+  private def globalArFc(trunc: DataFrame, stepDays: Int, granularity: String): DataFrame =
+    GlobalAR.globalArCore(
+      trunc.select(col("entity"), col("week").as("ds"), col("y")), stepDays, granularity)
+      .select(col("entity_id"), col("ds"), col("yhat"), lit("global_ar").as("model"))
 
   /** Forecast-vs-holdout scoring of one or more model-tagged forecast
     * frames: one broadcast join (hold is entity-count × h rows — the
@@ -139,79 +120,10 @@ object Backtest extends QueryModule {
         col("entity_id"), col("model"), col("n"), col("mae"), col("smape"))
   }
 
-  private def metricsForSplit(trunc: DataFrame, hold: DataFrame, stepDays: Int,
-      h: Int, model: String, granularity: String, level: String,
-      sharedFit: Option[DataFrame] = None): DataFrame = {
-    def fit = sharedFit.getOrElse(Forecast.olsFit(trunc, Forecasting.minSeriesLen))
-    scoreAgainst(hold, granularity, level)(Seq(
-      fcFor(model, trunc, fit, stepDays, h, granularity, level)
-        .withColumn("model", lit(model))))
-  }
-
-  /** Diagnostic hook for tools.BacktestProfile: run every refit combo
-    * serially, print wall-time each. */
-  private[graft] def profileAll(s: SparkSession, dir: String): Unit =
-    for (lv <- Forecasting.levels :+ "daily-supplier") {
-      val (series, dateCol, stepDays, h, gran, level) =
-        if (lv == "daily-supplier")
-          (Forecast.dailySeries(s, dir), "ds", 1, HoldoutDaily, "daily", "supplier")
-        else (Forecast.weeklyAt(s, dir, lv), "week", 7, HoldoutWeekly, "weekly", lv)
-      for (m <- allModels) {
-        val t = System.nanoTime()
-        val n = metricsFor(series, dateCol, stepDays, h, m, gran, level).count()
-        println(f"$gran%-7s $level%-9s $m%-15s rows=$n%-6d ${(System.nanoTime() - t) / 1e9}%.2f s")
-      }
-    }
-
-  /** Diagnostic hook for tools.BacktestLab: wall each group (split +
-    * 4 overlapped fits) in isolation. */
-  private[graft] def labGroups(s: SparkSession, dir: String): Unit =
-    for (lv <- Forecasting.levels :+ "daily-supplier") {
-      val t = System.nanoTime()
-      val parts =
-        if (lv == "daily-supplier")
-          groupParts(Forecast.dailySeries(s, dir), "ds", 1, HoldoutDaily, "daily", "supplier")
-        else groupParts(Forecast.weeklyAt(s, dir, lv), "week", 7, HoldoutWeekly, "weekly", lv)
-      println(f"group $lv%-16s ${(System.nanoTime() - t) / 1e9}%.2f s")
-      parts.foreach(_.unpersist())
-    }
-
-  /** Diagnostic hook for tools.BacktestLab: phase-time the product
-    * group's internals serially. */
-  private[graft] def labPhases(s: SparkSession, dir: String): Unit = {
-    def t[A](label: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      println(f"phase $label%-24s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val series = Forecast.weeklyAt(s, dir, "product")
-    t("series count")(series.count())
-    val (trunc0, hold0) = split(series, "week", 7, HoldoutWeekly)
-    val trunc = t("trunc persist")({ val p = trunc0.persist(); p.count(); p })
-    val hold = t("hold persist")({ val p = hold0.persist(); p.count(); p })
-    t("plain agg over trunc")(trunc.agg(sum(col("y").cast(LongType))).head())
-    val sf = t("shared fit persist")({
-      val p = Forecast.olsFit(trunc, Forecasting.minSeriesLen).persist(); p.count(); p })
-    val score = scoreAgainst(hold, "weekly", "product") _
-    for (pass <- 1 to 2) {
-      t(s"fused per-entity pass$pass")(score(perEntityModels.map(m =>
-        fcFor(m, trunc, sf, 7, HoldoutWeekly, "weekly", "product")
-          .withColumn("model", lit(m))))
-        .write.format("noop").mode("overwrite").save())
-      t(s"global_ar pass$pass")(score(Seq(
-        fcFor("global_ar", trunc, sf, 7, HoldoutWeekly, "weekly", "product")
-          .withColumn("model", lit("global_ar"))))
-        .write.format("noop").mode("overwrite").save())
-    }
-    trunc.unpersist(); hold.unpersist(); sf.unpersist()
-  }
-
   /** Session-lifetime metrics artifact — the stored
     * gold.forecast_metrics table a deployment materializes once per
     * run (Pipeline.runGold writes the real thing) and every consumer
-    * READS, the same stored-layer design as the q38 DQ marts. The 12
-    * combo frames are independent fit jobs, so they materialize
-    * CONCURRENTLY — the scheduler interleaves their stages and the
-    * three pooled-AR driver fetches overlap instead of serializing. */
+    * READS, the same stored-layer design as the q38 DQ marts. */
   private val metricsCache = new graft.util.Memo[(SparkSession, String), DataFrame](_._1.sparkContext.isStopped)
 
   /** Build the backtest artifacts eagerly (Bench prepare phase; runs
@@ -240,67 +152,76 @@ object Backtest extends QueryModule {
     championCache.getOrBuild((s, dir),
       championOver(backtestMetrics(s, dir)).coalesce(1).localCheckpoint())
 
+  /** The q79 scope over the memoized series artifacts: four groups
+    * (weekly × supplier/product/region, daily × supplier), each under
+    * its own job group, built concurrently. */
   private def backtestMetrics(s: SparkSession, dir: String): DataFrame =
     metricsCache.getOrBuild((s, dir), {
-      // one group per (granularity, level): the three models of a
-      // group refit the SAME truncated series, so the split persists
-      // once per group and is dropped as soon as the group's metric
-      // parts are materialized (the parts are entity-count-sized)
+      val pin: DataFrame => DataFrame = { df => val p = df.persist(); p.count(); p }
       val groups: Seq[(String, () => Seq[DataFrame])] =
         Forecasting.levels.map(lv => s"weekly-$lv" -> (() =>
-          groupParts(Forecast.weeklyAt(s, dir, lv), "week", 7, HoldoutWeekly, "weekly", lv))) :+
+          groupParts(Forecast.weeklyAt(s, dir, lv), "weekly", lv, allModels, pin))) :+
         ("daily-supplier" -> (() =>
-          groupParts(Forecast.dailySeries(s, dir), "ds", 1, HoldoutDaily, "daily", "supplier")))
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-      val parts = new Array[Seq[DataFrame]](groups.size)
-      val threads = groups.zipWithIndex.map { case ((name, b), i) =>
-        val t = new Thread(() => try {
-          s.sparkContext.setJobGroup(s"backtest-prep-$name",
-            s"forecast backtest refits: $name", interruptOnCancel = true)
-          parts(i) = b()
-        } catch { case e: Throwable => errs.add(e) }
-          finally s.sparkContext.clearJobGroup(),
-          s"backtest-prep-$name")
-        t.setDaemon(true); t.start(); t
-      }
-      threads.foreach(_.join())
-      if (!errs.isEmpty) { // a silent prep failure would fake the bench
-        val it = errs.iterator(); val head = it.next()
-        while (it.hasNext) head.addSuppressed(it.next())
-        throw head
-      }
-      // persist the UNIONED artifact, not just the 16 parts: every
-      // consumer (q79/q82/q83/q90) re-pays a 16-branch union per job
+          groupParts(Forecast.dailySeries(s, dir), "daily", "supplier", allModels, pin)))
+      val parts = Par.all(groups.map { case (name, build) => () =>
+        s.sparkContext.setJobGroup(s"backtest-prep-$name",
+          s"forecast backtest refits: $name", interruptOnCancel = true)
+        try build() finally s.sparkContext.clearJobGroup()
+      }).flatten
+      // persist the UNIONED artifact, not just the 8 parts: every
+      // consumer (q79/q82/q83/q90) re-pays a multi-branch union per job
       // otherwise — at sf0.1 that stage-launch overhead alone was
       // 4.3–4.9 s per query (BENCH_r08) on entity-count-sized data.
-      // coalesce(8): the bare union inherits 16 × shuffle.partitions
-      // cached partitions, and consumers then pay ~500 task launches
-      // per job over entity-count-sized data (parts are already
-      // persisted here, so the collapse costs one cheap pass)
-      // eager localCheckpoint, not persist+count: same materialization
+      // coalesce(8): the bare union inherits parts × shuffle.partitions
+      // cached partitions, and consumers then pay hundreds of task
+      // launches per job over entity-count-sized data (parts are
+      // already persisted here, so the collapse costs one cheap pass).
+      // Eager localCheckpoint, not persist+count: same materialization
       // barrier, but the memoized frame's plan becomes a LogicalRDD
       // leaf — consumers (q79/q82/q83 and the champion build) stop
-      // re-paying Catalyst analysis of the 16-branch refit lineage on
-      // every run (measured ~1 s/run driver-side at sf0.1), matching
-      // the stored gold.forecast_metrics semantics.
-      val flat = parts.flatten
-      val unioned = flat.reduce(_ unionByName _).coalesce(8).localCheckpoint()
-      flat.foreach(_.unpersist())
+      // re-paying Catalyst analysis of the refit lineage on every run
+      // (measured ~1 s/run driver-side at sf0.1), matching the stored
+      // gold.forecast_metrics semantics.
+      val unioned = parts.reduce(_ unionByName _).coalesce(8).localCheckpoint()
+      parts.foreach(_.unpersist())
       unioned
     })
 
-  private def groupParts(series: DataFrame, dateCol: String, stepDays: Int,
-      h: Int, granularity: String, level: String): Seq[DataFrame] = {
+  /** THE backtest group builder, shared by the query surface and the
+    * Pipeline: one dense (entity, date, y) series at one (granularity,
+    * level), split at cutoff = max(date) − step·H per entity into the
+    * truncated series (refit input) and the held-out actuals, then the
+    * requested `models` scored against the holdout. Returns the
+    * group's metric parts (at most two: the fused per-entity models
+    * and the pooled global_ar), each pinned through `materialize`.
+    *
+    * Per-entity models keep the reference's MIN_SERIES_LEN gate on the
+    * TRUNCATED length — an entity must still have 14 points after the
+    * holdout is withheld, like a deployment scoring on history it
+    * actually has. All of them consume ONE shared OLS fit; a model
+    * subset without a per-entity model skips that fit, and one
+    * without global_ar skips the pooled refit.
+    *
+    * Error folds: yhat is snapRound'd scale-4, y is an exact series
+    * value, so |yhat−y| is within 1 ulp of a 4-dp rational — summing
+    * through DECIMAL(38,8) (4 guard digits) is exact and
+    * order-independent in both engines. The per-row sMAPE quotient is
+    * IEEE-identical cross-engine, snapped at scale 6, then folded the
+    * same way. */
+  private def groupParts(series: DataFrame, granularity: String, level: String,
+      models: Seq[String], materialize: DataFrame => DataFrame): Seq[DataFrame] = {
+    val (dateCol, stepDays, h) =
+      if (granularity == "daily") ("ds", 1, HoldoutDaily) else ("week", 7, HoldoutWeekly)
+    val entityModels = perEntityModels.filter(models.contains)
     // trunc is deliberately NOT persisted: it is ~the whole series
     // (the split withholds only h of hundreds of points per entity),
-    // the series artifact is already cached, and the cutoff frame is
-    // a persisted per-entity scalar — so each consumer's trunc scan
-    // is the cached series scan plus a fused broadcast-probe filter,
+    // the series is already pinned, and the cutoff frame is a
+    // persisted per-entity scalar — so each consumer's trunc scan is
+    // the cached series scan plus a fused broadcast-probe filter,
     // while a second full-size cache copy cost a measured ~1.6 s of
     // serial materialization per large group at sf0.1
     val cut = series.groupBy(col("entity"))
       .agg(date_sub(max(col(dateCol)), stepDays * h).as("cutoff")).persist()
-    cut.count() // eager: see the sharedFit cache-fill-race note below
     val j = series.join(broadcast(cut), "entity")
     val trunc = j.filter(col(dateCol) <= col("cutoff"))
       .select(col("entity"), col(dateCol).as("week"), col("y"))
@@ -308,90 +229,58 @@ object Backtest extends QueryModule {
       .select(col("entity"), col(dateCol).as("ds"), col("y")).persist()
     // ONE OLS fit per group, persisted (entity-count-sized): linear,
     // seasonal_trend, and seasonal_naive's gate all consume it, so the
-    // fit's full-series groupBy pass runs once instead of three times.
-    // EAGER count(): lazily-persisted frames shared by the two
-    // concurrent scoring jobs made them race on cache-fill block locks
-    // — with 4 group threads × 2 job threads, 8 jobs contending on
-    // lazy fills measured a 9 s → 65 s prep lottery across otherwise
-    // clean bench windows; the eager barrier costs one entity-sized
-    // job per group and pins the variance down
-    val sharedFit = Forecast.olsFit(trunc, Forecasting.minSeriesLen).persist()
-    // hold and the fit depend only on cut (already materialized):
-    // their eager counts are independent single passes over the cached
-    // series, so materialize them CONCURRENTLY instead of back to back
-    // — each group's serial persist chain was cut+hold+fit long
-    locally {
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val t = new Thread(() =>
-        try { hold.count(); () } catch {
-          case e: Throwable => err.compareAndSet(null, e); ()
-        }, s"backtest-hold-$level")
-      t.setDaemon(true); t.start()
-      try sharedFit.count() catch {
-        case e: Throwable => t.join(); throw e
-      }
-      t.join()
-      if (err.get != null) throw err.get
-    }
+    // fit's full-series groupBy pass runs once instead of three times
+    val sharedFit =
+      if (entityModels.isEmpty) None
+      else Some(Forecast.olsFit(trunc, Forecasting.minSeriesLen).persist())
     try {
-      // two independent jobs over the shared persisted split + fit,
-      // materialized concurrently: the FUSED per-entity scoring (all
-      // three models through one union–join–fold plan) and the pooled
+      // EAGER counts: lazily-persisted frames shared by the concurrent
+      // scoring jobs made them race on cache-fill block locks — with 4
+      // group threads × 2 job threads, 8 jobs contending on lazy fills
+      // measured a 9 s → 65 s prep lottery across otherwise clean
+      // bench windows. cut first; hold and the fit depend only on it,
+      // so they materialize concurrently.
+      cut.count()
+      Par.all(Seq(() => hold.count()) ++ sharedFit.map(f => () => f.count()))
+      // independent jobs over the shared persisted split + fit,
+      // materialized concurrently: the FUSED per-entity scoring (the
+      // models through one union–join–fold plan) and the pooled
       // global_ar refit (whose driver-side solve fetch would serialize
       // anything behind it)
       val score = scoreAgainst(hold, granularity, level) _
-      val jobs: Seq[(String, () => DataFrame)] = Seq(
-        "per-entity" -> (() => score(perEntityModels.map(m =>
-          fcFor(m, trunc, sharedFit, stepDays, h, granularity, level)
-            .withColumn("model", lit(m))))),
-        "global-ar" -> (() => score(Seq(
-          fcFor("global_ar", trunc, sharedFit, stepDays, h, granularity, level)
-            .withColumn("model", lit("global_ar"))))))
-      val out = new Array[DataFrame](jobs.size)
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-      val ts = jobs.zipWithIndex.map { case ((name, build), i) =>
-        val t = new Thread(() => try {
-          val p = build().persist()
-          p.count(); out(i) = p
-        } catch { case e: Throwable => errs.add(e) }, s"backtest-fit-$level-$name")
-        t.setDaemon(true); t.start(); t
-      }
-      ts.foreach(_.join())
-      if (!errs.isEmpty) {
-        val it = errs.iterator(); val head = it.next()
-        while (it.hasNext) head.addSuppressed(it.next())
-        throw head
-      }
-      out.toSeq
-    } finally { cut.unpersist(); hold.unpersist(); sharedFit.unpersist() }
+      val entityPart = sharedFit.map(fit => () =>
+        score(entityModels.map(m => entityFc(m, trunc, fit, stepDays, h, granularity))))
+      val arPart = Option.when(models.contains("global_ar"))(() =>
+        score(Seq(globalArFc(trunc, stepDays, granularity))))
+      Par.all((entityPart ++ arPart).toSeq.map(part => () => materialize(part())))
+    } finally { cut.unpersist(); hold.unpersist(); sharedFit.foreach(_.unpersist()) }
   }
 
-  /** q79 — the backtest surface over the shared series artifacts:
-    * weekly × all models × all levels, daily × all models at the
-    * supplier level (the artifact granularity the daily models serve;
-    * per-level daily series are a Pipeline-side build, see
-    * metricsOverLevels). (granularity, level, model, entity_id) is
-    * the output's unique key. Reads the stored metrics artifact. */
+  /** q79 — the backtest surface over the shared series artifacts.
+    * (granularity, level, model, entity_id) is the output's unique
+    * key. Reads the stored metrics artifact. */
   def forecastBacktest(s: SparkSession, dir: String): DataFrame =
     backtestMetrics(s, dir)
       .orderBy(col("granularity"), col("level"), col("model"), col("entity_id"))
 
-  /** The Pipeline's gold.forecast_metrics build: every model × BOTH
-    * granularities × every level, series derived from the WRITTEN
-    * silver tables (medallion lineage, like gold.forecasts).
-    * `materialize` pins each level's two series across the six refits
-    * that share them. */
+  /** The Pipeline's gold.forecast_metrics build: `atModels` × BOTH
+    * granularities × `atLevels`, series derived from `resolve` (the
+    * WRITTEN silver tables — medallion lineage, like gold.forecasts).
+    * The 2 × levels groups build concurrently; `materialize` pins each
+    * group's series and its scoring parts, and is therefore called
+    * from concurrent threads. */
   def metricsOverLevels(resolve: String => DataFrame,
       materialize: DataFrame => DataFrame = identity,
       atLevels: Seq[String] = Forecasting.levels,
       atModels: Seq[String] = allModels): DataFrame =
-    atLevels.flatMap { lv =>
+    Par.all(atLevels.flatMap { lv =>
       val frame = Forecast.levelFrame(lv, resolve)
-      val weekly = materialize(Forecast.weeklyOver(frame, col("entity")))
-      val daily = materialize(Forecast.dailySeriesOver(frame, col("entity")))
-      atModels.map(m => metricsFor(weekly, "week", 7, HoldoutWeekly, m, "weekly", lv)) ++
-        atModels.map(m => metricsFor(daily, "ds", 1, HoldoutDaily, m, "daily", lv))
-    }.reduce(_ unionByName _)
+      Seq(
+        () => groupParts(materialize(Forecast.weeklyOver(frame, col("entity"))),
+          "weekly", lv, atModels, materialize),
+        () => groupParts(materialize(Forecast.dailySeriesOver(frame, col("entity"))),
+          "daily", lv, atModels, materialize))
+    }).flatten.reduce(_ unionByName _)
       .orderBy(col("granularity"), col("level"), col("model"), col("entity_id"))
 
   /** Champion model per series from a metrics frame: the
@@ -446,8 +335,8 @@ object Backtest extends QueryModule {
 
   // ---- DuckDB oracle twins -----------------------------------------
 
-  /** Truncated / held-out twins of `split`, normalized to the model
-    * generators' (entity, week, y) / (entity, ds, y) shapes. */
+  /** Truncated / held-out twins of groupParts' split, normalized to
+    * the model generators' (entity, week, y) / (entity, ds, y) shapes. */
   private def truncSql(seriesSql: String, dateCol: String, back: Int): String =
     s"""WITH btsrc AS ($seriesSql),
        |btcut AS (SELECT entity, max($dateCol) - $back AS cutoff FROM btsrc GROUP BY 1)

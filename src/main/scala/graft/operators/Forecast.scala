@@ -54,27 +54,15 @@ object Forecast extends QueryModule {
       "weekly-supplier" -> (() => weekly(s, dir)),
       "weekly-product" -> (() => weeklyAt(s, dir, "product")),
       "weekly-region" -> (() => weeklyAt(s, dir, "region")))
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = builds.map { case (name, b) =>
-      val t = new Thread(() => try {
-        // job-group the build from INSIDE its thread (setJobGroup is a
-        // thread-local property): the four concurrent prep jobs get
-        // attributable names in the Spark UI and are cancellable as a
-        // unit via sparkContext.cancelJobGroup
-        s.sparkContext.setJobGroup(s"forecast-prep-$name",
-          s"demand-series artifact build: $name", interruptOnCancel = true)
-        b(); ()
-      } catch { case e: Throwable => errs.add(e) }
-        finally s.sparkContext.clearJobGroup(),
-        s"forecast-prep-$name")
-      t.setDaemon(true); t.start(); t
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) { // a silent prep failure would fake the bench
-      val it = errs.iterator(); val head = it.next()
-      while (it.hasNext) head.addSuppressed(it.next())
-      throw head
-    }
+    // job-group each build from INSIDE its thread (setJobGroup is a
+    // thread-local property): the four concurrent prep jobs get
+    // attributable names in the Spark UI and are cancellable as a unit
+    // via sparkContext.cancelJobGroup
+    graft.util.Par.all(builds.map { case (name, b) => () =>
+      s.sparkContext.setJobGroup(s"forecast-prep-$name",
+        s"demand-series artifact build: $name", interruptOnCancel = true)
+      try b() finally s.sparkContext.clearJobGroup()
+    })
   }
 
   /** Bench prep-hash probe: the four stored series frames. */

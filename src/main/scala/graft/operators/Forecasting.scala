@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryModule
+import graft.util.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -88,31 +89,48 @@ object Forecasting extends QueryModule {
         s"supported: ${models.toSeq.sortBy(_._1).map { case (m, gs) => s"$m(${gs.mkString("/")})" }.mkString(", ")}")
 
   /** Dispatch over the shared series artifacts (query surface /
-    * ad-hoc callers). */
+    * ad-hoc callers): supplier level, weekly ungated (the q36/q37/q55
+    * surface), daily at the reference's MIN_SERIES_LEN gate. */
   def run(s: SparkSession, dir: String, model: String,
-      granularity: String = "weekly"): DataFrame = (model, granularity) match {
-    case ("linear", "weekly") =>
-      conform(Forecast.forecastLinear(s, dir), "linear", "weekly")
-    case ("seasonal_naive", "weekly") =>
-      conform(Forecast.forecastSeasonalNaive(s, dir), "seasonal_naive", "weekly")
-    // daily per-entity models run over the shared daily artifact with
-    // the reference's daily knobs: MIN_SERIES_LEN gate, 90-day horizon
-    // (DEFAULT_HORIZON_DAYS) for the trend model, one 7-day seasonal
-    // period for the replay
-    case ("linear", "daily") =>
-      conform(Forecast.forecastLinearOver(dailyAsWeekCols(Forecast.dailySeries(s, dir)),
-        minSeriesLen, stepDays = 1, horizon = 90), "linear", "daily")
-    case ("seasonal_naive", "daily") =>
-      conform(Forecast.forecastSeasonalNaiveOver(dailyAsWeekCols(Forecast.dailySeries(s, dir)),
-        minSeriesLen, stepDays = 1, period = 7), "seasonal_naive", "daily")
-    case ("seasonal_trend", "weekly") =>
-      conform(Forecast.forecastSeasonalTrend(s, dir), "seasonal_trend", "weekly")
-    case ("seasonal_trend", "daily") =>
-      conform(Forecast.forecastSeasonalTrendOver(dailyAsWeekCols(Forecast.dailySeries(s, dir)),
-        minSeriesLen, stepDays = 1, horizon = 90, period = 7), "seasonal_trend", "daily")
-    case ("global_ar", "daily") => GlobalAR.forecastGlobalAr(s, dir)
-    case ("global_ar", "weekly") => GlobalAR.forecastGlobalArWeekly(s, dir)
-    case _ => unsupported(model, granularity)
+      granularity: String = "weekly"): DataFrame =
+    dispatch(Forecast.weekly(s, dir), Forecast.dailySeries(s, dir), "supplier",
+      model, granularity, weeklyMinLen = 0, dailyMinLen = minSeriesLen)
+
+  /** THE (model, granularity) dispatch table over one level's weekly
+    * (entity, week, y) and daily (entity, ds, y) series; only the
+    * requested granularity's series is evaluated. Daily per-entity
+    * models run with the reference's daily knobs: 90-day horizon
+    * (DEFAULT_HORIZON_DAYS) for the trend models, one 7-day seasonal
+    * period for the replay. */
+  private def dispatch(weekly: => DataFrame, daily: => DataFrame, level: String,
+      model: String, granularity: String, weeklyMinLen: Int,
+      dailyMinLen: Int): DataFrame = {
+    def dailyWk = dailyAsWeekCols(daily)
+    (model, granularity) match {
+      case ("linear", "weekly") =>
+        conform(Forecast.forecastLinearOver(weekly, weeklyMinLen), "linear", "weekly", level)
+      case ("seasonal_naive", "weekly") =>
+        conform(Forecast.forecastSeasonalNaiveOver(weekly, weeklyMinLen),
+          "seasonal_naive", "weekly", level)
+      case ("seasonal_trend", "weekly") =>
+        conform(Forecast.forecastSeasonalTrendOver(weekly, weeklyMinLen),
+          "seasonal_trend", "weekly", level)
+      case ("linear", "daily") =>
+        conform(Forecast.forecastLinearOver(dailyWk, dailyMinLen, stepDays = 1, horizon = 90),
+          "linear", "daily", level)
+      case ("seasonal_naive", "daily") =>
+        conform(Forecast.forecastSeasonalNaiveOver(dailyWk, dailyMinLen, stepDays = 1, period = 7),
+          "seasonal_naive", "daily", level)
+      case ("seasonal_trend", "daily") =>
+        conform(Forecast.forecastSeasonalTrendOver(dailyWk, dailyMinLen, stepDays = 1,
+          horizon = 90, period = 7), "seasonal_trend", "daily", level)
+      case ("global_ar", "daily") =>
+        GlobalAR.globalArCore(daily, stepDays = 1, granularity = "daily", level = level)
+      case ("global_ar", "weekly") =>
+        GlobalAR.globalArCore(weekly.select(col("entity"), col("week").as("ds"), col("y")),
+          stepDays = 7, granularity = "weekly", level = level)
+      case _ => unsupported(model, granularity)
+    }
   }
 
   /** The per-entity fit cores name their date column `week` at any
@@ -120,23 +138,13 @@ object Forecasting extends QueryModule {
   private def dailyAsWeekCols(daily: DataFrame): DataFrame =
     daily.select(col("entity"), col("ds").as("week"), col("y"))
 
-  /** Dispatch over a caller-supplied lineitem frame — the Pipeline
-    * path: forecasts derive from the WRITTEN silver.lineitem, like
-    * every other gold table (medallion lineage). `materialize` pins
-    * the derived series across the model's multiple passes. Supplier
-    * level only; the Pipeline's full surface is `runOverLevels`. */
-  def runOver(lineitem: DataFrame, model: String, granularity: String,
-      materialize: DataFrame => DataFrame = identity): DataFrame =
-    runLevelOver(
-      lineitem.select(col("l_suppkey").as("entity"), col("l_shipdate"), col("l_quantity")),
-      "supplier", model, granularity, materialize, minLen = 0)
-
   /** The reference's per-run level loop (`run_parallel_forecasts`
     * iterates product/warehouse/region and pools every level's rows
     * into the one gold.forecasts write, forecasting.py:339-352): the
     * chosen model over EVERY level's series, level column varying.
     * `resolve` maps table name -> frame so the Pipeline can hand in
-    * the WRITTEN silver tables (the region level needs the dims).
+    * the WRITTEN silver tables (the region level needs the dims);
+    * `materialize` pins the derived series across the model's passes.
     *
     * Per-entity models apply the reference's MIN_SERIES_LEN gate —
     * at the product level most entities have short, sparse series and
@@ -151,40 +159,11 @@ object Forecasting extends QueryModule {
       materialize: DataFrame => DataFrame = identity,
       atLevels: Seq[String] = levels): DataFrame =
     atLevels.map { lv =>
-      runLevelOver(Forecast.levelFrame(lv, resolve), lv, model, granularity,
-        materialize, minLen = minSeriesLen)
+      val frame = Forecast.levelFrame(lv, resolve)
+      dispatch(materialize(Forecast.weeklyOver(frame, col("entity"))),
+        materialize(Forecast.dailySeriesOver(frame, col("entity"))), lv,
+        model, granularity, weeklyMinLen = minSeriesLen, dailyMinLen = minSeriesLen)
     }.reduce(_ unionByName _)
-
-  private def runLevelOver(frame: DataFrame, level: String, model: String,
-      granularity: String, materialize: DataFrame => DataFrame,
-      minLen: Int): DataFrame = {
-    lazy val weekly = materialize(Forecast.weeklyOver(frame, col("entity")))
-    lazy val daily = materialize(Forecast.dailySeriesOver(frame, col("entity")))
-    (model, granularity) match {
-      case ("linear", "weekly") =>
-        conform(Forecast.forecastLinearOver(weekly, minLen), "linear", "weekly", level)
-      case ("seasonal_naive", "weekly") =>
-        conform(Forecast.forecastSeasonalNaiveOver(weekly, minLen), "seasonal_naive", "weekly", level)
-      case ("linear", "daily") =>
-        conform(Forecast.forecastLinearOver(dailyAsWeekCols(daily),
-          minLen, stepDays = 1, horizon = 90), "linear", "daily", level)
-      case ("seasonal_naive", "daily") =>
-        conform(Forecast.forecastSeasonalNaiveOver(dailyAsWeekCols(daily),
-          minLen, stepDays = 1, period = 7), "seasonal_naive", "daily", level)
-      case ("seasonal_trend", "weekly") =>
-        conform(Forecast.forecastSeasonalTrendOver(weekly, minLen), "seasonal_trend", "weekly", level)
-      case ("seasonal_trend", "daily") =>
-        conform(Forecast.forecastSeasonalTrendOver(dailyAsWeekCols(daily),
-          minLen, stepDays = 1, horizon = 90, period = 7), "seasonal_trend", "daily", level)
-      case ("global_ar", "daily") =>
-        GlobalAR.globalArCore(daily, stepDays = 1, granularity = "daily", level = level)
-      case ("global_ar", "weekly") =>
-        GlobalAR.globalArCore(
-          weekly.select(col("entity"), col("week").as("ds"), col("y")),
-          stepDays = 7, granularity = "weekly", level = level)
-      case _ => unsupported(model, granularity)
-    }
-  }
 
   /** Session-lifetime memo of the weekly dispatch frame: q66 builds
     * it, q90 (champion application) re-reads it — the stored
@@ -240,23 +219,6 @@ object Forecasting extends QueryModule {
        |ORDER BY model, entity_id, ds""".stripMargin
   }
 
-  /** Run independent named builds on daemon threads; the first
-    * failure propagates (later ones ride as suppressed so a
-    * multi-branch breakage surfaces every diagnostic). */
-  private def runAll(jobs: Seq[(String, () => Unit)]): Unit = {
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val threads = jobs.map { case (tag, body) =>
-      val t = new Thread(() =>
-        try body() catch {
-          case e: Throwable =>
-            if (!err.compareAndSet(null, e)) err.get.addSuppressed(e)
-        }, s"dispatch-$tag")
-      t.setDaemon(true); t.start(); t
-    }
-    threads.foreach(_.join())
-    if (err.get != null) throw err.get
-  }
-
   /** Session-lifetime FULL dispatch artifact: every (model ×
     * granularity × level) combination the backtest scores — the four
     * models weekly at all three levels plus daily at the artifact
@@ -279,13 +241,6 @@ object Forecasting extends QueryModule {
 
   def fullDispatch(s: SparkSession, dir: String): DataFrame =
     fullDispatchCache.getOrBuild((s, dir), {
-      def probe[A](tag: String)(body: => A): A =
-        if (sys.env.contains("DISPATCH_PROBE")) {
-          val t0 = System.nanoTime()
-          val r = body
-          println(f"DISPATCHPROBE $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        } else body
       // one fit group per (level, granularity); knobs mirror run()'s
       // arms exactly: weekly supplier is the ungated q66 surface
       // (minLen 0, horizon 4, naive period 4, trend period 52), the
@@ -307,48 +262,32 @@ object Forecasting extends QueryModule {
       // persisted frames shared by concurrent jobs race on cache-fill
       // block locks — a measured 9 s → 65 s prep lottery). Entity-
       // count-sized; the four fits overlap on their own threads.
-      val fits = new Array[DataFrame](groups.size)
-      runAll(groups.zipWithIndex.map { case (g, i) =>
-        s"fit:${g.gran}:${g.level}" -> (() => probe(s"fit ${g.gran}:${g.level}") {
-          val f = Forecast.olsFit(g.series, g.minLen).persist()
-          f.count()
-          fits(i) = f
-        })
-      })
+      val fits = Par.all(groups.map(g => () => {
+        val f = Forecast.olsFit(g.series, g.minLen).persist()
+        f.count()
+        f
+      }))
       // phase 2: 16 branches (4 groups × 3 per-entity models + 4
       // pooled AR arms), each building AND materializing on its own
       // thread (the prep_kmeans pattern): a branch's output is tiny
       // (entities × horizon), so persist+count per branch overlaps
       // all fits on the 32 cores instead of leaving the parallelism
       // to one union job's stage scheduler.
-      val branchBuilds: Seq[(String, () => DataFrame)] =
-        groups.zipWithIndex.flatMap { case (g, i) =>
-          def fit = fits(i)
+      val branchBuilds: Seq[() => DataFrame] =
+        groups.zip(fits).flatMap { case (g, fit) =>
           Seq(
-            s"${g.gran}:${g.level}:linear" -> (() =>
-              conform(Forecast.forecastLinearFromFit(fit, g.stepDays, g.linHorizon),
-                "linear", g.gran, g.level)),
-            s"${g.gran}:${g.level}:seasonal_naive" -> (() =>
-              conform(Forecast.forecastSeasonalNaiveFromGate(g.series,
-                fit.select(col("entity"), col("last_week")), g.stepDays, g.naivePeriod),
-                "seasonal_naive", g.gran, g.level)),
-            s"${g.gran}:${g.level}:seasonal_trend" -> (() =>
-              conform(Forecast.forecastSeasonalTrendFromFit(g.series, fit,
-                g.stepDays, g.trendHorizon, g.trendPeriod),
-                "seasonal_trend", g.gran, g.level)))
-        } ++ Seq(
-          "weekly:supplier:global_ar" -> (() => run(s, dir, "global_ar", "weekly")),
-          "weekly:product:global_ar" -> (() => weeklyFitAt(s, dir, "product", "global_ar")),
-          "weekly:region:global_ar" -> (() => weeklyFitAt(s, dir, "region", "global_ar")),
-          "daily:supplier:global_ar" -> (() => run(s, dir, "global_ar", "daily")))
-      val built = new Array[DataFrame](branchBuilds.size)
-      runAll(branchBuilds.zipWithIndex.map { case ((tag, b), i) =>
-        tag -> (() => {
-          built(i) = probe(s"build+mat $tag") {
-            val p = b().persist(); p.count(); p
-          }
-        })
-      })
+            () => conform(Forecast.forecastLinearFromFit(fit, g.stepDays, g.linHorizon),
+              "linear", g.gran, g.level),
+            () => conform(Forecast.forecastSeasonalNaiveFromGate(g.series,
+              fit.select(col("entity"), col("last_week")), g.stepDays, g.naivePeriod),
+              "seasonal_naive", g.gran, g.level),
+            () => conform(Forecast.forecastSeasonalTrendFromFit(g.series, fit,
+              g.stepDays, g.trendHorizon, g.trendPeriod),
+              "seasonal_trend", g.gran, g.level))
+        } ++ groups.map(g => () =>
+          GlobalAR.globalArCore(g.series.select(col("entity"), col("week").as("ds"), col("y")),
+            g.stepDays, g.gran, g.level))
+      val built = Par.all(branchBuilds.map(b => () => { val p = b().persist(); p.count(); p }))
       // coalesce(16), not repartition: the final artifact collapses
       // from 16 × shuffle.partitions task-launch units to 16 like the
       // old repartition did, but each of the 16 tasks reads its slice
@@ -362,38 +301,11 @@ object Forecasting extends QueryModule {
       // the champion joins) stop re-paying Catalyst analysis of the
       // 16-branch lineage on every run — the stored-table semantics a
       // written gold.forecasts would have.
-      val d = probe("materialize union")(built.toSeq
-        .reduce(_ unionByName _)
-        .coalesce(16)
-        .localCheckpoint())
+      val d = built.reduce(_ unionByName _).coalesce(16).localCheckpoint()
       built.foreach(_.unpersist(false))
       fits.foreach(_.unpersist(false))
       d
     })
-
-  /** tools.DispatchProfile's window into the private branch builder. */
-  private[graft] def branchForProfile(s: SparkSession, dir: String,
-      lv: String, model: String): DataFrame = weeklyFitAt(s, dir, lv, model)
-
-  /** Full-series weekly fits at a non-default level, over the
-    * memoized per-level series artifact — the q103 surface's
-    * product/region arm (the supplier arm IS forecastDispatch). */
-  private def weeklyFitAt(s: SparkSession, dir: String, lv: String,
-      model: String): DataFrame = {
-    val series = Forecast.weeklyAt(s, dir, lv)
-    model match {
-      case "linear" =>
-        conform(Forecast.forecastLinearOver(series, minSeriesLen), "linear", "weekly", lv)
-      case "seasonal_naive" =>
-        conform(Forecast.forecastSeasonalNaiveOver(series, minSeriesLen), "seasonal_naive", "weekly", lv)
-      case "seasonal_trend" =>
-        conform(Forecast.forecastSeasonalTrendOver(series, minSeriesLen), "seasonal_trend", "weekly", lv)
-      case "global_ar" =>
-        GlobalAR.globalArCore(
-          series.select(col("entity"), col("week").as("ds"), col("y")),
-          stepDays = 7, granularity = "weekly", level = lv)
-    }
-  }
 
   private[operators] val fullDispatchSql: String = {
     val globalWeeklySup = GlobalAR.globalArSql(

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryModule
 import graft.util.Parity._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -117,11 +117,6 @@ object GlobalAR extends QueryModule {
     * reference there. Spark and the DuckDB oracle share these
     * fixed-denominator semantics (q50/q55 pin them); the deviation
     * only matters for entities younger than the lag window. */
-  /** Diagnostic seam for tools.ArPhaseProfile (same as globalArCore
-    * with defaults). */
-  private[graft] def profileCore(series: DataFrame, stepDays: Int): DataFrame =
-    globalArCore(series, stepDays, if (stepDays == 1) "daily" else "weekly")
-
   private[operators] def globalArCore(series: DataFrame, stepDays: Int,
     granularity: String, level: String = "supplier"): DataFrame = {
     val w = Window.partitionBy(col("entity")).orderBy(col("ds"))
@@ -143,8 +138,8 @@ object GlobalAR extends QueryModule {
     // exact integer sum, ONE double division). The previous
     // DecimalType(38,8) accumulation of those six sums was the
     // dominant global_ar cost (9.2 s of a 10.2 s daily refit at
-    // sf0.1, tools.ArPhaseProfile): precision-38 decimal sums run
-    // on the interpreted Decimal128 path, ~12× the long-sum cost.
+    // sf0.1): precision-38 decimal sums run on the interpreted
+    // Decimal128 path, ~12× the long-sum cost.
     // Exactness bounds: factors cast to LONG before multiplying, so
     // per-row products are exact to 2^63 (tighter than the old
     // double-product 2^53 bound); the long SUM is exact while
@@ -197,29 +192,19 @@ object GlobalAR extends QueryModule {
     // sized localCheckpoint, rebuilt every run) CONCURRENTLY with the
     // Gram fit's driver fetch — the two jobs were the arm's whole
     // serial chain, in every fullDispatch/backtest global_ar arm and
-    // in q50/q55 themselves
-    val histRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]
-    val histErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val histT = new Thread(() =>
-      try histRef.set(hist0.localCheckpoint())
-      catch { case e: Throwable => histErr.compareAndSet(null, e); () },
-      s"global-ar-hist-$granularity-$level")
-    histT.setDaemon(true); histT.start()
-    // Materialize the fitted model: the solve runs over ONE row of 20
-    // exact sums, and collecting its 5 coefficients (standard model-fit
+    // in q50/q55 themselves. The fit side materializes the fitted
+    // model: the solve runs over ONE row of 20 exact sums, and
+    // collecting its 5 coefficients (standard model-fit
     // materialization, like any MLlib estimator) keeps the unrolled AR
     // recursion's expression trees small — leaving beta0..beta4 as live
     // columns makes Catalyst's collapsed projections substitute the
     // whole elimination chain into every p_k, exponentially.
-    val betaRow = try {
-      solveFormulas.foldLeft(fit) { case (df, (name, f)) =>
+    val Seq(hist: DataFrame @unchecked, betaRow: Row) = graft.util.Par.all[Any](Seq(
+      () => hist0.localCheckpoint(),
+      () => solveFormulas.foldLeft(fit) { case (df, (name, f)) =>
         df.withColumn(name, expr(f)) }
         .select((0 to 4).map(i => col(s"beta$i")): _*)
-        .head()
-    } catch { case e: Throwable => histT.join(); throw e }
-    histT.join()
-    if (histErr.get != null) throw histErr.get
-    val hist = histRef.get
+        .head()))
     // an empty panel (every series shorter than the lag_14 window)
     // yields NULL sums -> NULL betas; fail with a diagnosis instead of
     // an opaque NPE from getDouble

@@ -2,30 +2,38 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 
-/** Concurrent materialization helpers for independent frames inside
-  * one query build (the q10 parallel-branch rule): eager
-  * localCheckpoint()s issued from the constructing thread run their
-  * jobs back to back, so N independent artifact builds serialize on
-  * the driver even with idle executors. */
+/** The one concurrency helper for independent builds inside a query
+  * or layer (the q10 parallel-branch rule): eager jobs issued from the
+  * constructing thread run back to back, so N independent artifact
+  * builds serialize on the driver even with idle executors. */
 object Par {
 
-  /** localCheckpoint every frame CONCURRENTLY (daemon thread each) and
-    * return the checkpointed frames in order. First failure propagates
-    * with the rest suppressed (the Forecasting.runAll rule). */
-  def localCheckpointAll(frames: Seq[DataFrame]): Seq[DataFrame] = {
-    val out = new Array[DataFrame](frames.size)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val ts = frames.zipWithIndex.map { case (f, i) =>
+  /** Run every thunk on its own fresh daemon thread and return the
+    * results in order. Fresh threads, not a reused pool: Spark's local
+    * properties (job groups, scheduler pools, tracing spans) are
+    * inheritable thread-locals copied when a thread is CREATED, so only
+    * a thread started from the caller carries the caller's properties.
+    * Every thunk runs to completion; the first failure (in thunk order)
+    * is thrown with the others added to it as suppressed, so a
+    * multi-branch breakage surfaces every diagnostic. */
+  def all[T](thunks: Seq[() => T]): Seq[T] = {
+    val out = new Array[Any](thunks.size)
+    val errs = new Array[Throwable](thunks.size)
+    val threads = thunks.zipWithIndex.map { case (thunk, i) =>
       val t = new Thread(() =>
-        try out(i) = f.localCheckpoint()
-        catch {
-          case e: Throwable =>
-            if (!err.compareAndSet(null, e)) err.get.addSuppressed(e)
-        }, s"par-ckpt-$i")
+        try out(i) = thunk()
+        catch { case e: Throwable => errs(i) = e }, s"par-$i")
       t.setDaemon(true); t.start(); t
     }
-    ts.foreach(_.join())
-    if (err.get != null) throw err.get
-    out.toSeq
+    threads.foreach(_.join())
+    errs.filter(_ != null) match {
+      case Array() => out.toSeq.map(_.asInstanceOf[T])
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+    }
   }
+
+  /** localCheckpoint every frame concurrently and return the
+    * checkpointed frames in order. */
+  def localCheckpointAll(frames: Seq[DataFrame]): Seq[DataFrame] =
+    all(frames.map(f => () => f.localCheckpoint()))
 }

@@ -119,6 +119,23 @@ class PipelineSpec extends SparkSpec {
     store2.teardown()
   }
 
+  test("a failed layer keeps its exception class in audit.etl_log") {
+    import org.apache.spark.sql.functions.col
+    val root3 = java.nio.file.Files.createTempDirectory("pipeline_missing").toString
+    val missing = s"$root3/no_such_input"
+    val expected = intercept[Exception](Tables.t(spark, missing, "region")).getClass.getName
+    val failed = Pipeline.run(spark, missing, s"$root3/store")
+    assert(failed.map(r => r.layer -> r.ok) ==
+      Seq("bronze" -> false, "silver" -> false, "gold" -> false))
+    assert(failed.head.error.exists(_.startsWith(s"$expected: ")))
+    val log = new LayerStore(spark, s"$root3/store").table("audit", "etl_log")
+    val bronze = log.filter(col("layer") === "bronze").select("ok", "error").head()
+    assert(!bronze.getBoolean(0))
+    assert(bronze.getString(1).startsWith(s"$expected: "))
+    // layers gated off by the failure never ran: no error of their own
+    assert(log.filter(col("layer") =!= "bronze" && col("error").isNotNull).count() == 0)
+  }
+
   test("re-run is idempotent where it must be") {
     results // force first run
     val bronzeBefore = store.table("bronze", "lineitem").count()
