@@ -82,14 +82,10 @@ object Bench {
     // cluster build reads the shared band artifact). The two builds
     // are independent — overlap them.
     "prep_dedup_decon" -> ((s, d) => {
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val t = new Thread(() =>
-        try { graft.operators.CorpusOps.decontaminate(s, d); () }
-        catch { case e: Throwable => err.compareAndSet(null, e); () })
-      t.setDaemon(true); t.start()
-      graft.operators.TextOps.dedupClusters(s, d)
-      t.join()
-      if (err.get != null) throw err.get
+      graft.util.Par.all(Seq(
+        () => graft.operators.CorpusOps.decontaminate(s, d),
+        () => graft.operators.TextOps.dedupClusters(s, d)))
+      ()
     }),
     "prep_gold_marts" -> ((s, d) => graft.operators.DqChecks.prepareArtifacts(s, d)),
     "prep_demand_series" -> ((s, d) => graft.operators.Forecast.prepareArtifacts(s, d)),
@@ -110,30 +106,17 @@ object Bench {
     // are a written table in a real deployment (SemDeDup ships them),
     // and the Lloyd fit is an iterative build like the LSH chains
     "prep_kmeans" -> ((s, d) => {
-      // the two fits are independent iterative jobs — overlap them
+      // the three fits are independent iterative jobs — overlap them
       // (the Forecast.prepareArtifacts pattern) so the doc fit's
       // tokenize+explode hides behind the embedding fit's rounds.
-      // The thread's failure must propagate: a swallowed error would
-      // fake the prep and push the silent re-fit into q108's timed
-      // cell (the "silent prep failure" rule Backtest guards too)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      def bg(body: => Unit): Thread = {
-        val t = new Thread(() =>
-          try body catch {
-            case e: Throwable =>
-              // keep the first failure as primary, suppress the rest —
-              // a second thread's diagnostic must not vanish when both
-              // fits break (mirrors the fullDispatch handler)
-              if (!err.compareAndSet(null, e)) err.get.addSuppressed(e)
-          })
-        t.setDaemon(true); t.start(); t
-      }
-      val ts = Seq(
-        bg(graft.operators.VectorOps.kmeansAssignment(s, d): Unit),
-        bg(graft.operators.VectorOps.storedIndexFit(s, d): Unit))
-      graft.operators.VectorOps.docKmeansAssignment(s, d)
-      ts.foreach(_.join())
-      if (err.get != null) throw err.get
+      // Par.all rethrows a failure (the rest suppressed): a swallowed
+      // error would fake the prep and push the silent re-fit into
+      // q108's timed cell
+      graft.util.Par.all(Seq(
+        () => graft.operators.VectorOps.kmeansAssignment(s, d),
+        () => graft.operators.VectorOps.storedIndexFit(s, d),
+        () => graft.operators.VectorOps.docKmeansAssignment(s, d)))
+      ()
     }))
 
   /** Per-prep content probes: the stored frames each prep stage

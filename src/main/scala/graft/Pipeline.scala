@@ -172,20 +172,6 @@ object Pipeline {
     }
   }
 
-  /** Incremental refresh of the supplier-keyed marts: inventory_health
-    * (grain s_suppkey × s_name × p_type) and supplier_monthly (grain
-    * order_month × s_suppkey × s_name). Every group key carries
-    * s_suppkey, so a supplier-sliced rebuild over the filtered fact
-    * equals the full rebuild's slice exactly — the month-slicing
-    * argument of refreshMonthlySales, on the supplier axis. The delta
-    * names WHICH lineitem rows changed (for a row that MOVED
-    * suppliers, the caller includes both versions — the standard
-    * incremental-delta contract); content comes from the CURRENT
-    * silver tables, so run refreshSilverLineitem first. No driver
-    * collect anywhere: the delta's supplier set broadcasts as a frame
-    * into both the fact filter (semi-join) and the key-scoped swap
-    * (overwriteMatching) — at scale a supplier-clustered fact layout
-    * would prune at the scan. Returns rows written per mart. */
   /** Restrict `df` to the rows whose `keys` appear in `keyFrame` —
     * the shared delta-scoping move of every incremental refresh. The
     * physical shape is ADVISED per call (util.JoinAdvisor): the key
@@ -258,6 +244,20 @@ object Pipeline {
     refreshDashboard(spark, store, store.table(deltaLayer, deltaName),
       ks => storedSketch(store, deltaLayer, deltaName, ks))
 
+  /** Incremental refresh of the supplier-keyed marts: inventory_health
+    * (grain s_suppkey × s_name × p_type) and supplier_monthly (grain
+    * order_month × s_suppkey × s_name). Every group key carries
+    * s_suppkey, so a supplier-sliced rebuild over the filtered fact
+    * equals the full rebuild's slice exactly — the month-slicing
+    * argument of refreshMonthlySales, on the supplier axis. The delta
+    * names WHICH lineitem rows changed (for a row that MOVED
+    * suppliers, the caller includes both versions — the standard
+    * incremental-delta contract); content comes from the CURRENT
+    * silver tables, so run refreshSilverLineitem first. No driver
+    * collect anywhere: the delta's supplier set broadcasts as a frame
+    * into both the fact filter (semi-join) and the key-scoped swap
+    * (overwriteMatching) — at scale a supplier-clustered fact layout
+    * would prune at the scan. Returns rows written per mart. */
   def refreshSupplierMarts(spark: SparkSession, store: LayerStore,
       deltaLineitem: DataFrame,
       sketchOf: Seq[String] => Option[Seq[String]] = _ => None): (Long, Long) = {
@@ -443,7 +443,9 @@ object Pipeline {
     * the forecasting model per run, like the reference's CLI
     * (forecasting.py:434-449); see operators.Forecasting.models.
     * Granularity "auto" = the model's default (daily for global_ar,
-    * weekly otherwise) — shared by every entry point. */
+    * weekly otherwise) — shared by every entry point. An unsupported
+    * model or granularity fails the layer before any gold table is
+    * written. */
   def runGold(spark: SparkSession, store: LayerStore, runId: String,
       forecastModel: String = "global_ar",
       forecastGranularity: String = "auto"): LayerResult = timed("gold") {
@@ -451,6 +453,7 @@ object Pipeline {
       if (forecastGranularity == "auto")
         graft.operators.Forecasting.defaultGranularity(forecastModel)
       else forecastGranularity
+    graft.operators.Forecasting.requireSupported(Seq(forecastModel), granularity)
     // every mart builds from the silver tables runSilver just WROTE —
     // bronze→silver→gold lineage, never raw source
     val resolve = silverStarResolver(store)

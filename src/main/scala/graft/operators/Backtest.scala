@@ -47,40 +47,22 @@ object Backtest extends QueryModule {
   val HoldoutWeekly = 4
   val HoldoutDaily = 7
 
-  private val allModels = Seq("linear", "seasonal_naive", "seasonal_trend", "global_ar")
-
   /** The models whose fits are PER-ENTITY — an entity's metrics depend
     * only on its own series, so incremental re-scoring can restrict
     * the fact to the delta's entities. global_ar is excluded: its
     * pooled coefficients couple every series (Pipeline.
     * refreshModelSelection re-fits it over the full fact instead). */
-  private[graft] val perEntityModels: Seq[String] = allModels.filterNot(_ == "global_ar")
+  private[graft] val perEntityModels: Seq[String] = Forecasting.models.filterNot(_ == "global_ar")
 
-  /** Seasonal-position period per granularity (see
-    * Forecast.forecastSeasonalTrendOver): 52 weekly, 7 daily. */
-  private def seasonPeriod(granularity: String): Int =
-    if (granularity == "daily") 7 else 52
-
-  /** The per-entity model forecast over the truncated series,
-    * normalized to (entity_id, ds, yhat, model). `fit` is the group's one
-    * olsFit(trunc, minLen) frame: linear consumes it directly,
-    * seasonal_trend skips its own fit pass, seasonal_naive reuses its
-    * (entity, last_week) as the gate (olsFit applies the identical
-    * count >= minLen filter). The FromFit/FromGate seams are what the
-    * public models delegate to, so the arithmetic has one definition. */
+  /** The per-entity model forecast over the truncated series (the
+    * forecast builder's `Forecasting.entityForecast`, the holdout as
+    * its horizon), normalized to (entity_id, ds, yhat, model). `fit` is
+    * the group's one olsFit(trunc, minLen) frame. */
   private def entityFc(model: String, trunc: DataFrame, fit: DataFrame,
-      stepDays: Int, h: Int, granularity: String): DataFrame =
-    (model match {
-      case "linear" =>
-        Forecast.forecastLinearFromFit(fit, stepDays, horizon = h)
-      case "seasonal_naive" =>
-        Forecast.forecastSeasonalNaiveFromGate(trunc,
-          fit.select(col("entity"), col("last_week")), stepDays, period = h)
-      case "seasonal_trend" =>
-        Forecast.forecastSeasonalTrendFromFit(trunc, fit, stepDays, horizon = h,
-          period = seasonPeriod(granularity))
-    }).select(col("entity").cast(StringType).as("entity_id"), col("ds"), col("yhat"),
-      lit(model).as("model"))
+      h: Int, granularity: String): DataFrame =
+    Forecasting.entityForecast(model, trunc, fit, granularity, h)
+      .select(col("entity").cast(StringType).as("entity_id"), col("ds"), col("yhat"),
+        lit(model).as("model"))
 
   /** The pooled global_ar refit over the truncated series; it scores
     * the holdout-overlapping prefix of its fixed 7-step horizon
@@ -160,9 +142,9 @@ object Backtest extends QueryModule {
       val pin: DataFrame => DataFrame = { df => val p = df.persist(); p.count(); p }
       val groups: Seq[(String, () => Seq[DataFrame])] =
         Forecasting.levels.map(lv => s"weekly-$lv" -> (() =>
-          groupParts(Forecast.weeklyAt(s, dir, lv), "weekly", lv, allModels, pin))) :+
+          groupParts(Forecast.weeklyAt(s, dir, lv), "weekly", lv, Forecasting.models, pin))) :+
         ("daily-supplier" -> (() =>
-          groupParts(Forecast.dailySeries(s, dir), "daily", "supplier", allModels, pin)))
+          groupParts(Forecast.dailySeries(s, dir), "daily", "supplier", Forecasting.models, pin)))
       val parts = Par.all(groups.map { case (name, build) => () =>
         s.sparkContext.setJobGroup(s"backtest-prep-$name",
           s"forecast backtest refits: $name", interruptOnCancel = true)
@@ -210,8 +192,8 @@ object Backtest extends QueryModule {
     * same way. */
   private def groupParts(series: DataFrame, granularity: String, level: String,
       models: Seq[String], materialize: DataFrame => DataFrame): Seq[DataFrame] = {
-    val (dateCol, stepDays, h) =
-      if (granularity == "daily") ("ds", 1, HoldoutDaily) else ("week", 7, HoldoutWeekly)
+    val Forecasting.Knobs(dateCol, stepDays, _, _, _) = Forecasting.knobs(granularity)
+    val h = if (granularity == "daily") HoldoutDaily else HoldoutWeekly
     val entityModels = perEntityModels.filter(models.contains)
     // trunc is deliberately NOT persisted: it is ~the whole series
     // (the split withholds only h of hundreds of points per entity),
@@ -249,7 +231,7 @@ object Backtest extends QueryModule {
       // anything behind it)
       val score = scoreAgainst(hold, granularity, level) _
       val entityPart = sharedFit.map(fit => () =>
-        score(entityModels.map(m => entityFc(m, trunc, fit, stepDays, h, granularity))))
+        score(entityModels.map(m => entityFc(m, trunc, fit, h, granularity))))
       val arPart = Option.when(models.contains("global_ar"))(() =>
         score(Seq(globalArFc(trunc, stepDays, granularity))))
       Par.all((entityPart ++ arPart).toSeq.map(part => () => materialize(part())))
@@ -272,7 +254,7 @@ object Backtest extends QueryModule {
   def metricsOverLevels(resolve: String => DataFrame,
       materialize: DataFrame => DataFrame = identity,
       atLevels: Seq[String] = Forecasting.levels,
-      atModels: Seq[String] = allModels): DataFrame =
+      atModels: Seq[String] = Forecasting.models): DataFrame =
     Par.all(atLevels.flatMap { lv =>
       val frame = Forecast.levelFrame(lv, resolve)
       Seq(
@@ -363,7 +345,7 @@ object Backtest extends QueryModule {
         (Forecast.forecastSeasonalNaiveSqlOver(tSql, minLen, stepDays, period = h), "entity")
       case "seasonal_trend" =>
         (Forecast.forecastSeasonalTrendSqlOver(tSql, minLen, stepDays, horizon = h,
-          period = seasonPeriod(granularity)), "entity")
+          period = Forecasting.knobs(granularity).seasonPeriod), "entity")
       case "global_ar" =>
         (GlobalAR.globalArSql(s"SELECT entity, week AS ds, y FROM ($tSql)",
           stepDays, granularity, level), "entity_id")
@@ -385,13 +367,13 @@ object Backtest extends QueryModule {
 
   private val forecastBacktestSql = {
     val weekly = for {
-      lv <- Forecasting.levels; m <- allModels
+      lv <- Forecasting.levels; m <- Forecasting.models
     } yield {
       val (entityExpr, fromClause) = Forecast.levelSql(lv)
       metricsSql(Forecast.weeklySqlAt(entityExpr, fromClause), "week", 7,
         HoldoutWeekly, m, "weekly", lv)
     }
-    val daily = allModels.map(m =>
+    val daily = Forecasting.models.map(m =>
       metricsSql(Forecast.dailySeriesSql, "ds", 1, HoldoutDaily, m, "daily", "supplier"))
     (weekly ++ daily).map(q => s"($q)").mkString("\nUNION ALL\n") +
       "\nORDER BY granularity, level, model, entity_id"

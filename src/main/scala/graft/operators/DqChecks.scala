@@ -66,20 +66,10 @@ object DqChecks extends QueryModule {
     val builds = Seq(
       "monthly_sales" -> (() => GoldMarts.monthlySalesUnsorted(s, dir)),
       "supplier_monthly" -> (() => GoldMarts.supplierMonthlyUnsorted(s, dir)))
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = builds.map { case (name, b) =>
-      val t = new Thread(() => try { cachedMart(s, dir, name, b()); () }
-        catch { case e: Throwable => errs.add(e) })
-      t.setDaemon(true); t.start(); t
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) { // a silent prep failure would fake the bench
-      val it = errs.iterator(); val head = it.next()
-      // both builders failing for different reasons must surface both:
-      // attach the rest as suppressed so the root cause isn't discarded
-      while (it.hasNext) head.addSuppressed(it.next())
-      throw head
-    }
+    // a silent prep failure would fake the bench: Par.all rethrows the
+    // first failure with the other builder's attached as suppressed
+    graft.util.Par.all(builds.map { case (name, b) => () => cachedMart(s, dir, name, b()) })
+    ()
   }
 
   /** Bench prep-hash probe: the two stored mart frames. */

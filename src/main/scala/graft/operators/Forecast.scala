@@ -117,11 +117,6 @@ object Forecast extends QueryModule {
       w
     })
 
-  /** Series build over a caller-supplied lineitem frame — the seam
-    * that lets the Pipeline derive forecasts from the WRITTEN
-    * silver.lineitem instead of raw source (medallion lineage).
-    * `entity` selects the forecasting level's key (default: the
-    * supplier level). */
   /** Gap-fill an observed (entity, date, y) series to a dense
     * per-entity calendar: between consecutive observed dates, emit the
     * missing steps as y=0 via lag + sequence-explode. This is
@@ -146,6 +141,11 @@ object Forecast extends QueryModule {
         when(col(dateCol) === col("obs_d"), col("obs_y")).otherwise(lit(0.0)).as("y"))
   }
 
+  /** Series build over a caller-supplied lineitem frame — the seam
+    * that lets the Pipeline derive forecasts from the WRITTEN
+    * silver.lineitem instead of raw source (medallion lineage).
+    * `entity` selects the forecasting level's key (default: the
+    * supplier level). */
   private[graft] def dailySeriesOver(l: DataFrame,
       entity: org.apache.spark.sql.Column = col("l_suppkey")): DataFrame = {
     val daily = l.groupBy(entity.as("entity"),
@@ -243,6 +243,8 @@ object Forecast extends QueryModule {
   private def buildWeekly(s: SparkSession, dir: String): DataFrame =
     weeklyOver(Tables.t(s, dir, "lineitem"))
 
+  /** Weekly twin of `dailySeriesOver`: the same caller-supplied
+    * lineitem seam, ISO-Monday steps. */
   private[graft] def weeklyOver(l: DataFrame,
       entity: org.apache.spark.sql.Column = col("l_suppkey")): DataFrame = {
     val observed = l
@@ -284,20 +286,6 @@ object Forecast extends QueryModule {
   def forecastLinear(s: SparkSession, dir: String): DataFrame =
     forecastLinearOver(weekly(s, dir))
 
-  /** `minLen` drops entities with fewer than that many series points
-    * before fitting — the reference's MIN_SERIES_LEN=14 gate
-    * (forecasting.py:58,172). 0 = no gate (the supplier-level q36
-    * surface, where every series is long). The gate also keeps the
-    * slope denominator n·sxx−sx² nonzero: a 1-point series would
-    * divide 0/0, and double-division-by-zero semantics (NaN vs NULL)
-    * are exactly the kind of cross-engine edge the oracles must not
-    * depend on. */
-  /** `stepDays`/`horizon` select the granularity: weekly steps of 7
-    * days × 4 steps (the q36 surface), or daily steps × 90 — the
-    * reference's DEFAULT_HORIZON_DAYS (forecasting.py:56,439: 90 days
-    * daily, 12 weeks weekly; the weekly-4 horizon predates this knob
-    * and is oracle-pinned). The input frame's date column is named
-    * `week` whatever the granularity (the daily wrapper renames). */
   /** Shared closed-form OLS trend fit over a (entity, week, y) series:
     * (entity, last_week, slope, intercept). ONE definition of the
     * parity-critical fit arithmetic — the linear model and the
@@ -348,6 +336,21 @@ object Forecast extends QueryModule {
        |         (sy - ((n * sxy - sx * sy) / CAST(n * sxx - sx * sx AS DOUBLE)) * CAST(sx AS DOUBLE)) / n AS intercept
        |  FROM fit)""".stripMargin
 
+  /** `minLen` drops entities with fewer than that many series points
+    * before fitting — the reference's MIN_SERIES_LEN=14 gate
+    * (forecasting.py:58,172). 0 = no gate (the supplier-level q36
+    * surface, where every series is long). The gate also keeps the
+    * slope denominator n·sxx−sx² nonzero: a 1-point series would
+    * divide 0/0, and double-division-by-zero semantics (NaN vs NULL)
+    * are exactly the kind of cross-engine edge the oracles must not
+    * depend on.
+    *
+    * `stepDays`/`horizon` select the granularity: weekly steps of 7
+    * days × 4 steps (the q36 surface), or daily steps × 90 — the
+    * reference's DEFAULT_HORIZON_DAYS (forecasting.py:56,439: 90 days
+    * daily, 12 weeks weekly; the weekly-4 horizon predates this knob
+    * and is oracle-pinned). The input frame's date column is named
+    * `week` whatever the granularity (daily callers rename `ds`). */
   private[operators] def forecastLinearOver(weeklySeries: DataFrame,
       minLen: Int = 0, stepDays: Int = 7, horizon: Int = 4): DataFrame =
     forecastLinearFromFit(olsFit(weeklySeries, minLen), stepDays, horizon)

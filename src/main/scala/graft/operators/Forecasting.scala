@@ -6,22 +6,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Per-run model dispatch — the reference's `run_forecasting_pipeline`
-  * (forecasting.py:168-211,434-449) selects ONE model per run by name
-  * and emits every model's rows through the single `gold.forecasts`
-  * interface (ds / yhat / yhat_lower / yhat_upper / granularity /
-  * model / level / entity_id, forecasting.py:67-81; run_id is stamped
-  * by the caller's run-scoped overwrite, as in Pipeline.runGold).
+/** The forecasting model family behind the reference's
+  * `run_forecasting_pipeline` (forecasting.py:168-211,434-449), which
+  * selects ONE model per run by name and emits every model's rows
+  * through the single `gold.forecasts` interface (ds / yhat /
+  * yhat_lower / yhat_upper / granularity / model / level / entity_id,
+  * forecasting.py:67-81; run_id is stamped by the caller's run-scoped
+  * overwrite, as in Pipeline.runGold).
+  *
+  * One builder, two scopes: `groupParts` is the only way a forecast
+  * group — one (granularity, level) series, its shared OLS fit and
+  * each requested model's rows — is built.
+  *  - The Pipeline (`runOverLevels`, gold.forecasts) runs ONE model at
+  *    EVERY level, gated at `minSeriesLen`, over series derived from
+  *    the written silver tables.
+  *  - The query surface (`fullDispatch`, q66/q71/q90/q103) runs EVERY
+  *    model: weekly at every level with the supplier level ungated
+  *    (the q36/q37/q55 surface), plus daily at the supplier level.
   *
   * Model substitutions are those documented in SURVEY §7.4 (no JVM
   * Prophet/SARIMAX/LightGBM): "linear" is the closed-form OLS trend,
-  * "seasonal_naive" the period-4 replay, "global_ar" the pooled
+  * "seasonal_naive" the one-period replay, "seasonal_trend" the
+  * additive trend + seasonality decomposition, "global_ar" the pooled
   * 5-feature autoregressive model — each oracle-verified on its own
-  * (q36/q37/q50/q55); q66 verifies the DISPATCH: all models conformed
-  * to the one output interface, model column included.
-  *
-  * Scale: dispatch adds nothing to the plans — it conforms column
-  * shape only; both series granularities stay shared artifacts.
+  * (q36/q37/q81/q50/q55); q66 verifies the dispatch: all models
+  * conformed to the one output interface, model column included.
   *
   * Which model should a caller pick? The reference claims "85%+
   * forecast accuracy" (README:364) but computes no accuracy anywhere;
@@ -44,20 +53,28 @@ import org.apache.spark.sql.types._
   */
 object Forecasting extends QueryModule {
 
-  /** model -> supported granularities. Every model runs at both, like
-    * the reference (prophet/sarimax run per-granularity with daily=90
-    * days / weekly horizons, forecasting.py:177,434-449). */
-  val models: Map[String, Seq[String]] = Map(
-    "linear" -> Seq("daily", "weekly"),
-    "seasonal_naive" -> Seq("daily", "weekly"),
-    "seasonal_trend" -> Seq("daily", "weekly"),
-    "global_ar" -> Seq("daily", "weekly"))
+  /** The models, in the backtest's order. Every model runs at both
+    * granularities, like the reference (prophet/sarimax run
+    * per-granularity with daily=90 days / weekly horizons,
+    * forecasting.py:177,434-449). */
+  val models: Seq[String] = Seq("linear", "seasonal_naive", "seasonal_trend", "global_ar")
+
+  /** Per-granularity knobs: the series' date column, the step between
+    * points, the forecast horizon of the trend models (weekly 4 — the
+    * oracle-pinned q36 surface; daily 90 — the reference's
+    * DEFAULT_HORIZON_DAYS, forecasting.py:56,439), the seasonal-naive
+    * replay period and the seasonal_trend position period (the
+    * reference's SARIMAX s=7 daily, s=52 weekly, forecasting.py:196). */
+  private[operators] case class Knobs(dateCol: String, stepDays: Int, horizon: Int,
+      naivePeriod: Int, seasonPeriod: Int)
+
+  private[operators] val knobs: Map[String, Knobs] = Map(
+    "weekly" -> Knobs("week", 7, 4, 4, 52),
+    "daily" -> Knobs("ds", 1, 90, 7, 7))
 
   /** The granularity a model runs at when the caller doesn't choose:
-    * global_ar's native horizon is daily; the other models are
-    * weekly-only. Shared by every entry point (CLI and programmatic)
-    * so "linear" without a granularity never dispatches to an
-    * unsupported (linear, daily) pair. */
+    * global_ar's native horizon is daily, the other models' is weekly.
+    * Shared by every entry point (CLI and programmatic). */
   def defaultGranularity(model: String): String =
     if (model == "global_ar") "daily" else "weekly"
 
@@ -72,10 +89,19 @@ object Forecasting extends QueryModule {
     * series shorter than this are skipped by every per-entity model. */
   val minSeriesLen: Int = 14
 
+  /** Reject an unknown model or granularity before anything is built
+    * or written, naming the supported values. */
+  def requireSupported(models: Seq[String], granularity: String): Unit =
+    if (!knobs.contains(granularity) || !models.forall(this.models.contains))
+      throw new IllegalArgumentException(
+        s"no forecasting model ${models.mkString("'", "', '", "'")} at granularity " +
+          s"'$granularity' — supported models: ${this.models.mkString(", ")}; " +
+          s"granularities: ${knobs.keys.toSeq.sorted.mkString(", ")}")
+
   /** Conform a bare (entity, ds, yhat, bounds) frame to the reference
     * forecasts interface. */
   private def conform(df: DataFrame, model: String, granularity: String,
-      level: String = "supplier"): DataFrame =
+      level: String): DataFrame =
     df.select(
       col("entity").cast(StringType).as("entity_id"),
       col("ds"), col("yhat"), col("yhat_lower"), col("yhat_upper"),
@@ -83,68 +109,65 @@ object Forecasting extends QueryModule {
       lit(model).as("model"),
       lit(level).as("level"))
 
-  private def unsupported(model: String, granularity: String): Nothing =
-    throw new IllegalArgumentException(
-      s"no forecasting model '$model' at granularity '$granularity' — " +
-        s"supported: ${models.toSeq.sortBy(_._1).map { case (m, gs) => s"$m(${gs.mkString("/")})" }.mkString(", ")}")
-
-  /** Dispatch over the shared series artifacts (query surface /
-    * ad-hoc callers): supplier level, weekly ungated (the q36/q37/q55
-    * surface), daily at the reference's MIN_SERIES_LEN gate. */
-  def run(s: SparkSession, dir: String, model: String,
-      granularity: String = "weekly"): DataFrame =
-    dispatch(Forecast.weekly(s, dir), Forecast.dailySeries(s, dir), "supplier",
-      model, granularity, weeklyMinLen = 0, dailyMinLen = minSeriesLen)
-
-  /** THE (model, granularity) dispatch table over one level's weekly
-    * (entity, week, y) and daily (entity, ds, y) series; only the
-    * requested granularity's series is evaluated. Daily per-entity
-    * models run with the reference's daily knobs: 90-day horizon
-    * (DEFAULT_HORIZON_DAYS) for the trend models, one 7-day seasonal
-    * period for the replay. */
-  private def dispatch(weekly: => DataFrame, daily: => DataFrame, level: String,
-      model: String, granularity: String, weeklyMinLen: Int,
-      dailyMinLen: Int): DataFrame = {
-    def dailyWk = dailyAsWeekCols(daily)
-    (model, granularity) match {
-      case ("linear", "weekly") =>
-        conform(Forecast.forecastLinearOver(weekly, weeklyMinLen), "linear", "weekly", level)
-      case ("seasonal_naive", "weekly") =>
-        conform(Forecast.forecastSeasonalNaiveOver(weekly, weeklyMinLen),
-          "seasonal_naive", "weekly", level)
-      case ("seasonal_trend", "weekly") =>
-        conform(Forecast.forecastSeasonalTrendOver(weekly, weeklyMinLen),
-          "seasonal_trend", "weekly", level)
-      case ("linear", "daily") =>
-        conform(Forecast.forecastLinearOver(dailyWk, dailyMinLen, stepDays = 1, horizon = 90),
-          "linear", "daily", level)
-      case ("seasonal_naive", "daily") =>
-        conform(Forecast.forecastSeasonalNaiveOver(dailyWk, dailyMinLen, stepDays = 1, period = 7),
-          "seasonal_naive", "daily", level)
-      case ("seasonal_trend", "daily") =>
-        conform(Forecast.forecastSeasonalTrendOver(dailyWk, dailyMinLen, stepDays = 1,
-          horizon = 90, period = 7), "seasonal_trend", "daily", level)
-      case ("global_ar", "daily") =>
-        GlobalAR.globalArCore(daily, stepDays = 1, granularity = "daily", level = level)
-      case ("global_ar", "weekly") =>
-        GlobalAR.globalArCore(weekly.select(col("entity"), col("week").as("ds"), col("y")),
-          stepDays = 7, granularity = "weekly", level = level)
-      case _ => unsupported(model, granularity)
+  /** THE per-entity model: (entity, ds, yhat, yhat_lower, yhat_upper)
+    * from a (entity, week, y) series and its `Forecast.olsFit` frame.
+    * linear consumes the fit directly, seasonal_trend skips its own fit
+    * pass, seasonal_naive reuses the fit's (entity, last_week) as its
+    * gate (olsFit applies the identical count >= minLen filter). The
+    * FromFit/FromGate seams are what the public models delegate to, so
+    * the arithmetic has one definition. The backtest passes its holdout
+    * as `horizon`; the replay always emits one naive period. */
+  private[operators] def entityForecast(model: String, series: DataFrame, fit: DataFrame,
+      granularity: String, horizon: Int): DataFrame = {
+    val k = knobs(granularity)
+    model match {
+      case "linear" => Forecast.forecastLinearFromFit(fit, k.stepDays, horizon)
+      case "seasonal_naive" =>
+        Forecast.forecastSeasonalNaiveFromGate(series,
+          fit.select(col("entity"), col("last_week")), k.stepDays, k.naivePeriod)
+      case "seasonal_trend" =>
+        Forecast.forecastSeasonalTrendFromFit(series, fit, k.stepDays, horizon, k.seasonPeriod)
     }
   }
 
-  /** The per-entity fit cores name their date column `week` at any
-    * granularity; rename a daily (entity, ds, y) series into them. */
-  private def dailyAsWeekCols(daily: DataFrame): DataFrame =
-    daily.select(col("entity"), col("ds").as("week"), col("y"))
+  /** THE forecast group builder, shared by the query surface and the
+    * Pipeline: one dense (entity, date, y) series at one (granularity,
+    * level), and each requested model's forecasts in the one forecasts
+    * interface. Returns one part per model, each pinned through
+    * `materialize`.
+    *
+    * The per-entity models drop series shorter than `minLen` and
+    * consume ONE shared OLS fit, pinned through `materialize` before
+    * any branch launches (lazily persisted frames shared by concurrent
+    * jobs race on cache-fill block locks — the Backtest.groupParts
+    * rule); a model subset without a per-entity model skips the fit.
+    * The branches then build AND materialize concurrently: a branch's
+    * output is tiny (entities × horizon), so the overlap keeps every
+    * core busy instead of leaving the parallelism to one union job's
+    * stage scheduler. The pooled global_ar branch is separate — the
+    * recorded r9 lesson: fusing AR fits couples their driver-side
+    * solves and loses, not wins. The caller releases every pin. */
+  private[operators] def groupParts(series: DataFrame, granularity: String, level: String,
+      minLen: Int, models: Seq[String], materialize: DataFrame => DataFrame): Seq[DataFrame] = {
+    val k = knobs(granularity)
+    val wk = series.select(col("entity"), col(k.dateCol).as("week"), col("y"))
+    val fit = Option.when(models.exists(_ != "global_ar"))(materialize(Forecast.olsFit(wk, minLen)))
+    Par.all(models.map(m => () => materialize(
+      if (m == "global_ar")
+        GlobalAR.globalArCore(series.select(col("entity"), col(k.dateCol).as("ds"), col("y")),
+          k.stepDays, granularity, level)
+      else conform(entityForecast(m, wk, fit.get, granularity, k.horizon), m, granularity, level))))
+  }
 
   /** The reference's per-run level loop (`run_parallel_forecasts`
     * iterates product/warehouse/region and pools every level's rows
     * into the one gold.forecasts write, forecasting.py:339-352): the
-    * chosen model over EVERY level's series, level column varying.
-    * `resolve` maps table name -> frame so the Pipeline can hand in
-    * the WRITTEN silver tables (the region level needs the dims);
-    * `materialize` pins the derived series across the model's passes.
+    * chosen model over EVERY level's series, level column varying,
+    * the levels built concurrently. `resolve` maps table name -> frame
+    * so the Pipeline can hand in the WRITTEN silver tables (the region
+    * level needs the dims); `materialize` pins each level's series,
+    * fit and forecasts, and is therefore called from concurrent
+    * threads.
     *
     * Per-entity models apply the reference's MIN_SERIES_LEN gate —
     * at the product level most entities have short, sparse series and
@@ -157,13 +180,23 @@ object Forecasting extends QueryModule {
     * unchanged. */
   def runOverLevels(resolve: String => DataFrame, model: String, granularity: String,
       materialize: DataFrame => DataFrame = identity,
-      atLevels: Seq[String] = levels): DataFrame =
-    atLevels.map { lv =>
+      atLevels: Seq[String] = levels): DataFrame = {
+    requireSupported(Seq(model), granularity)
+    Par.all(atLevels.map { lv => () =>
       val frame = Forecast.levelFrame(lv, resolve)
-      dispatch(materialize(Forecast.weeklyOver(frame, col("entity"))),
-        materialize(Forecast.dailySeriesOver(frame, col("entity"))), lv,
-        model, granularity, weeklyMinLen = minSeriesLen, dailyMinLen = minSeriesLen)
-    }.reduce(_ unionByName _)
+      val series =
+        if (granularity == "daily") Forecast.dailySeriesOver(frame, col("entity"))
+        else Forecast.weeklyOver(frame, col("entity"))
+      groupParts(materialize(series), granularity, lv, minSeriesLen, Seq(model), materialize)
+    }).flatten.reduce(_ unionByName _)
+      // one partition per level (no shuffle: coalesce reads the pins
+      // locally). A pinned part keeps its cached plan's full
+      // shuffle.partitions split — AQE does not coalesce a cached
+      // plan's output — so writing it as is would spread each level's
+      // entity × horizon rows over that many tiny files, and every
+      // reader of gold.forecasts would pay a task per file
+      .coalesce(atLevels.size)
+  }
 
   /** Session-lifetime memo of the weekly dispatch frame: q66 builds
     * it, q90 (champion application) re-reads it — the stored
@@ -219,91 +252,44 @@ object Forecasting extends QueryModule {
        |ORDER BY model, entity_id, ds""".stripMargin
   }
 
-  /** Session-lifetime FULL dispatch artifact: every (model ×
-    * granularity × level) combination the backtest scores — the four
-    * models weekly at all three levels plus daily at the artifact
-    * level (supplier) — in the one forecasts interface. The champion
-    * application (q103) filters THIS frame by the q82 selection, so
-    * serving the measured-best model per series costs a broadcast
-    * join, not a refit.
+  /** Session-lifetime FULL dispatch artifact — the query surface's
+    * scope of the one builder: every model weekly at all three levels
+    * plus daily at the artifact level (supplier), exactly the
+    * (granularity, level) surfaces the backtest scores, in the one
+    * forecasts interface. The champion application (q103) filters
+    * THIS frame by the q82 selection, so serving the measured-best
+    * model per series costs a broadcast join, not a refit; q66 and
+    * q71 are filters of it too.
     *
-    * This is THE build of the dispatch family (q66's weekly-supplier
-    * frame is a filter of it, see forecastDispatch). Structure is the
-    * backtest's fit-group shape: one (level, granularity) group per
-    * series artifact, the group's three per-entity models consuming
-    * ONE shared OLS fit through the FromFit/FromGate seams (value-
-    * identical to the public model paths by construction — those
-    * delegate here), so the full-series fit groupBy runs once per
-    * group instead of three times. The four pooled global_ar arms
-    * stay separate branches — the recorded r9 lesson: fusing AR fits
-    * couples their driver-side solves and loses, not wins. */
+    * Four `groupParts` calls over the memoized series artifacts, built
+    * concurrently: weekly supplier is the ungated q66 surface (minLen
+    * 0), the other three groups gate at MIN_SERIES_LEN. */
   private val fullDispatchCache = new graft.util.Memo[(SparkSession, String), DataFrame](_._1.sparkContext.isStopped)
 
   def fullDispatch(s: SparkSession, dir: String): DataFrame =
     fullDispatchCache.getOrBuild((s, dir), {
-      // one fit group per (level, granularity); knobs mirror run()'s
-      // arms exactly: weekly supplier is the ungated q66 surface
-      // (minLen 0, horizon 4, naive period 4, trend period 52), the
-      // other levels gate at MIN_SERIES_LEN, daily runs the 90-day
-      // trend horizon and 7-day seasonal period
-      case class Group(level: String, gran: String, series: DataFrame,
-        minLen: Int, stepDays: Int, linHorizon: Int, naivePeriod: Int,
-        trendHorizon: Int, trendPeriod: Int)
-      val groups = Seq(
-        Group("supplier", "weekly", Forecast.weekly(s, dir), 0, 7, 4, 4, 4, 52),
-        Group("product", "weekly", Forecast.weeklyAt(s, dir, "product"),
-          minSeriesLen, 7, 4, 4, 4, 52),
-        Group("region", "weekly", Forecast.weeklyAt(s, dir, "region"),
-          minSeriesLen, 7, 4, 4, 4, 52),
-        Group("supplier", "daily", dailyAsWeekCols(Forecast.dailySeries(s, dir)),
-          minSeriesLen, 1, 90, 7, 90, 7))
-      // phase 1: the four shared fits, materialized EAGERLY before any
-      // consumer thread launches (the Backtest.groupParts rule: lazily
-      // persisted frames shared by concurrent jobs race on cache-fill
-      // block locks — a measured 9 s → 65 s prep lottery). Entity-
-      // count-sized; the four fits overlap on their own threads.
-      val fits = Par.all(groups.map(g => () => {
-        val f = Forecast.olsFit(g.series, g.minLen).persist()
-        f.count()
-        f
-      }))
-      // phase 2: 16 branches (4 groups × 3 per-entity models + 4
-      // pooled AR arms), each building AND materializing on its own
-      // thread (the prep_kmeans pattern): a branch's output is tiny
-      // (entities × horizon), so persist+count per branch overlaps
-      // all fits on the 32 cores instead of leaving the parallelism
-      // to one union job's stage scheduler.
-      val branchBuilds: Seq[() => DataFrame] =
-        groups.zip(fits).flatMap { case (g, fit) =>
-          Seq(
-            () => conform(Forecast.forecastLinearFromFit(fit, g.stepDays, g.linHorizon),
-              "linear", g.gran, g.level),
-            () => conform(Forecast.forecastSeasonalNaiveFromGate(g.series,
-              fit.select(col("entity"), col("last_week")), g.stepDays, g.naivePeriod),
-              "seasonal_naive", g.gran, g.level),
-            () => conform(Forecast.forecastSeasonalTrendFromFit(g.series, fit,
-              g.stepDays, g.trendHorizon, g.trendPeriod),
-              "seasonal_trend", g.gran, g.level))
-        } ++ groups.map(g => () =>
-          GlobalAR.globalArCore(g.series.select(col("entity"), col("week").as("ds"), col("y")),
-            g.stepDays, g.gran, g.level))
-      val built = Par.all(branchBuilds.map(b => () => { val p = b().persist(); p.count(); p }))
+      val pins = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+      val pin: DataFrame => DataFrame = { df => val p = df.persist(); p.count(); pins.add(p); p }
+      val groups: Seq[() => Seq[DataFrame]] =
+        levels.map(lv => () => groupParts(Forecast.weeklyAt(s, dir, lv), "weekly", lv,
+          if (lv == "supplier") 0 else minSeriesLen, models, pin)) :+
+          (() => groupParts(Forecast.dailySeries(s, dir), "daily", "supplier",
+            minSeriesLen, models, pin))
       // coalesce(16), not repartition: the final artifact collapses
       // from 16 × shuffle.partitions task-launch units to 16 like the
       // old repartition did, but each of the 16 tasks reads its slice
       // of the per-branch caches LOCALLY — no shuffle and no 500+
       // upstream task launches for the collapse pass (the branches are
       // already materialized, so coalescing costs 16 cache-read
-      // tasks). The branch + fit caches release afterwards — the
+      // tasks). The branch + fit pins release afterwards — the
       // artifact is its own storage. Eager localCheckpoint instead of
       // persist+count: same materialization, but the memoized frame's
-      // plan becomes a LogicalRDD LEAF, so consumers (q66/q90/q103 and
-      // the champion joins) stop re-paying Catalyst analysis of the
-      // 16-branch lineage on every run — the stored-table semantics a
-      // written gold.forecasts would have.
-      val d = built.reduce(_ unionByName _).coalesce(16).localCheckpoint()
-      built.foreach(_.unpersist(false))
-      fits.foreach(_.unpersist(false))
+      // plan becomes a LogicalRDD LEAF, so consumers (q66/q71/q90/q103
+      // and the champion joins) stop re-paying Catalyst analysis of
+      // the 16-branch lineage on every run — the stored-table
+      // semantics a written gold.forecasts would have.
+      val d = Par.all(groups).flatten.reduce(_ unionByName _).coalesce(16).localCheckpoint()
+      pins.forEach(_.unpersist(false))
       d
     })
 
@@ -318,7 +304,7 @@ object Forecasting extends QueryModule {
       s"SELECT * FROM ($globalWeeklySup)")
     val weeklyOther = for {
       lv <- levels.filterNot(_ == "supplier")
-      m <- models.keys.toSeq.sorted
+      m <- models.sorted
     } yield {
       val (entityExpr, fromClause) = Forecast.levelSql(lv)
       val series = Forecast.weeklySqlAt(entityExpr, fromClause)
@@ -372,10 +358,13 @@ object Forecasting extends QueryModule {
   }
 
   /** q71 — the daily per-entity models through the dispatch: trend
-    * over 90 days, 7-day seasonal replay, one output interface. */
+    * over 90 days, 7-day seasonal replay, one output interface. A
+    * filter of the full dispatch artifact (its daily supplier group),
+    * like q66. */
   def forecastDailyModels(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, "linear", "daily")
-      .unionByName(run(s, dir, "seasonal_naive", "daily"))
+    fullDispatch(s, dir)
+      .filter(col("granularity") === "daily" && col("level") === "supplier" &&
+        col("model").isin("linear", "seasonal_naive"))
       .orderBy(col("model"), col("entity_id"), col("ds"))
 
   private val forecastDailyModelsSql = {

@@ -67,27 +67,13 @@ object TextOps extends QueryModule {
     * band index plus the q124 similarity-graph edges derived from it.
     * After the band index lands, the PR graph and the containment
     * probe set are independent consumers of the shared shingle cache —
-    * overlap them on threads (the prep_kmeans pattern) so the shorter
-    * build hides behind the longer one; first failure propagates,
-    * the second rides as suppressed. */
+    * overlap them through util.Par so the shorter build hides behind
+    * the longer one; first failure propagates, the second rides as
+    * suppressed. */
   def prepareArtifacts(s: SparkSession, dir: String): Unit = {
     sharedBands(s, dir)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val t = new Thread(() =>
-      try { sharedContainProbes(s, dir); () }
-      catch { case e: Throwable =>
-        // mirror the main-thread handler (r14 advice): if the main
-        // thread already stored its failure, ride as suppressed
-        // instead of being silently dropped
-        if (!err.compareAndSet(null, e)) err.get.addSuppressed(e)
-      })
-    t.setDaemon(true); t.start()
-    try prGraph(s, dir)
-    catch { case e: Throwable =>
-      if (!err.compareAndSet(null, e)) err.get.addSuppressed(e)
-    }
-    t.join()
-    if (err.get != null) throw err.get
+    graft.util.Par.all(Seq(() => sharedContainProbes(s, dir), () => prGraph(s, dir)))
+    ()
   }
 
   /** Bench prep-hash probe: the frames prep_text_lsh materializes

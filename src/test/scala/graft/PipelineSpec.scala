@@ -136,6 +136,15 @@ class PipelineSpec extends SparkSpec {
     assert(log.filter(col("layer") =!= "bronze" && col("error").isNotNull).count() == 0)
   }
 
+  test("an unknown forecast model fails gold before it writes anything") {
+    val root4 = java.nio.file.Files.createTempDirectory("pipeline_prophet").toString
+    val store4 = new LayerStore(spark, root4)
+    val gold = Pipeline.runGold(spark, store4, "prophet-run", forecastModel = "prophet")
+    assert(!gold.ok)
+    assert(gold.error.exists(_.startsWith("java.lang.IllegalArgumentException: ")))
+    assert(!store4.exists("gold", "monthly_sales"))
+  }
+
   test("re-run is idempotent where it must be") {
     results // force first run
     val bronzeBefore = store.table("bronze", "lineitem").count()
