@@ -156,21 +156,7 @@ object Bench {
   /** The bench's session, shared with TimeIt. */
   def session(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // FAIR job scheduling: the prepare stages run their independent
-      // builds on concurrent threads (backtest groups, k-means fits,
-      // series levels); under the default FIFO each stage of the first
-      // submitted job monopolizes the task slots while later jobs'
-      // runnable stages wait, serializing exactly the overlap the
-      // preps are structured around
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHED", "FAIR"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // JVM/codegen warmup outside any timed section
     try {
       val w = spark.read.parquet(s"$sfDir/region.parquet")
@@ -204,7 +190,7 @@ object Bench {
       try body catch {
         case e: Throwable =>
           failures += label
-          System.err.println(s"[bench] $label FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          System.err.println(s"[bench] $label FAILED: ${Pipeline.describe(e)}")
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -415,7 +401,7 @@ object Bench {
         // original artifact built fine) — log and drop the sample
         val ok = try { prep(spark, alias); true } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] prep retime $label FAILED: ${e.getMessage}")
+            System.err.println(s"[bench] prep retime $label FAILED: ${Pipeline.describe(e)}")
             false
         }
         val v = (System.nanoTime() - t0) / 1e9
@@ -447,7 +433,7 @@ object Bench {
     val prepHashes: Seq[(String, String)] = prepProbes.map { case (label, probe) =>
       label -> (try probe(spark, sfDir).map(frameHash).mkString("|")
         catch { case e: Throwable =>
-          System.err.println(s"[bench] prep hash $label FAILED: ${e.getMessage}")
+          System.err.println(s"[bench] prep hash $label FAILED: ${Pipeline.describe(e)}")
           "err"
         })
     }

@@ -532,7 +532,7 @@ object Pipeline {
 
   /** "Class: message; caused by: Class: message; ..." over the cause
     * chain (bounded, so a cyclic chain cannot loop). */
-  private def describe(e: Throwable): String =
+  private[graft] def describe(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
       .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("; caused by: ")
 
@@ -567,13 +567,7 @@ object Pipeline {
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft-pipeline"
     val model = if (args.length > 2) args(2) else "global_ar"
     val granularity = if (args.length > 3) args(3) else "auto"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val results = run(spark, sfDir, outRoot, model, granularity)
     results.foreach(r => println(
       f"[pipeline] ${r.layer}%-7s ok=${r.ok} tables=${r.tables} rows=${r.rows} ${r.seconds}%.1fs"))

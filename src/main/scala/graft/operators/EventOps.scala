@@ -1015,9 +1015,7 @@ object EventOps extends QueryModule {
     * events shuffle ONCE on user_id (lag + running sum share the
     * same window spec, so one sort serves both), the run aggregation
     * re-uses that partitioning, and the closing lead runs on
-    * run-count rows — never the raw log. The write-path counterpart
-    * (merging a NEW batch into a STORED history) is
-    * LayerStore.scd2Merge. */
+    * run-count rows — never the raw log. */
   def scd2History(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))

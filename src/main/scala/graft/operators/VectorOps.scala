@@ -1466,15 +1466,12 @@ object VectorOps extends QueryModule {
     val base = base0.persist()
     var cents = base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cell"), col("e").as("cv"), col("norm2").as("cnorm2"))
-    for (r <- 1 to KM_ITERS) {
-      val t0 = System.nanoTime()
+    for (_ <- 1 to KM_ITERS) {
       // coalesce(1): the centroid frame is K rows — checkpointing and
       // re-broadcasting it as 32 near-empty partitions costs more
       // tasks than the whole round's math
       cents = kmUpdate(kmAssign(base, cents), intValued)
         .coalesce(1).localCheckpoint()
-      if (sys.env.contains("KM_PROBE"))
-        println(f"KMPROBE round$r ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     val fin = kmAssign(base, cents).persist()
     fin.count()

@@ -61,9 +61,9 @@ object PolyHash {
     (exprs: Seq[Expression]) => PolyHash(exprs.head))
 }
 
-/** Session extension wiring: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
-  * spark.sql.extensions=graft.plans.GraftExtensions) makes
+/** Session extension wiring: a builder's `.withExtensions(new
+  * GraftExtensions)` (or spark.sql.extensions=graft.plans.GraftExtensions;
+  * `graft.Session` installs neither) makes
   * `poly_hash(...)` available from SQL text and plans the native
   * AS-OF join operator (graft.plans.AsOfJoinPlan). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

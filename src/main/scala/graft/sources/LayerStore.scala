@@ -294,16 +294,14 @@ class LayerStore(spark: SparkSession, root: String) {
     * lost. This is the table-level analogue of Spark's task-level
     * commit protocol, and the property SaveMode.Overwrite alone does
     * NOT give you (it deletes the target before writing). */
-  private def stageSwap(layer: String, name: String, df: DataFrame,
-    writeTo: String => Unit = null): Long = {
+  private def stageSwap(layer: String, name: String, df: DataFrame): Long = {
     recoverOrphanBackup(layer, name)
     val target = hadoopPath(layer, name)
     val staging = hadoopPath(layer, name, ".__staging__")
     val backup = hadoopPath(layer, name, ".__bak__")
     val fs = fsFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
-    if (writeTo != null) writeTo(staging.toString)
-    else df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     if (fs.exists(backup)) fs.delete(backup, true)
     if (fs.exists(target) && !fs.rename(target, backup))
       sys.error(s"stage-swap: cannot move $target aside")
@@ -525,7 +523,7 @@ class LayerStore(spark: SparkSession, root: String) {
     * pipeline needs to pin "corpus snapshot N" for a reproducible run
     * while ingest keeps writing. A crash before the pointer rename
     * leaves a committed-or-partial orphan directory the pointer never
-    * references (the next write skips past it; vacuum removes it).
+    * references (the next write skips past it).
     * Returns the new version number. */
   def writeSnapshot(layer: String, name: String, df: DataFrame): Long = {
     require(layers.contains(layer), s"unknown layer $layer")
@@ -545,13 +543,9 @@ class LayerStore(spark: SparkSession, root: String) {
     val ptr = pointerPath(layer, name)
     // ATOMIC overwrite-rename via FileContext (POSIX rename(2) on the
     // local FS, the store's atomic rename on HDFS): there is no window
-    // where the pointer is absent. The previous delete-then-rename had
-    // one, and the _SUCCESS fallback in snapshotVersion picks the
-    // NEWEST committed version — so a crash inside a rollback's swap
-    // (v3 -> v2) would recover to v3, the exact version the rollback
-    // was retiring. With the overwrite-rename a crash leaves either
-    // the old pointer or the new one, both correct states; the
-    // fallback now only ever serves tables that never had a pointer.
+    // where the pointer is absent, so a crash leaves either the old
+    // pointer or the new one, both correct states; the _SUCCESS
+    // fallback in snapshotVersion only serves tables that lost theirs.
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       ptr.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(fs.makeQualified(tmp), fs.makeQualified(ptr),
@@ -571,71 +565,6 @@ class LayerStore(spark: SparkSession, root: String) {
       versionDir(layer, name, v), "_SUCCESS")),
       s"snapshot v$v of $layer.$name is not available")
     spark.read.parquet(versionDir(layer, name, v).toString)
-  }
-
-  /** Roll the published pointer back to a retained version — an O(1)
-    * metadata operation, no data rewrite. The next writeSnapshot
-    * still numbers past the abandoned versions (history is never
-    * renumbered), so rollback + re-ingest cannot collide with a
-    * pinned reader. */
-  def rollbackSnapshot(layer: String, name: String, v: Long): Unit = {
-    val fs = fsFor(pointerPath(layer, name))
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      versionDir(layer, name, v), "_SUCCESS")),
-      s"cannot roll back to missing snapshot v$v of $layer.$name")
-    publishPointer(layer, name, v, fs)
-  }
-
-  /** Semantic diff between two retained snapshots (the change-data-
-    * feed a consumer derives when the writer didn't emit one): per
-    * key, rows only in `v2` are `added`, rows only in `v1` are
-    * `removed`, and keys present in both with any non-key column
-    * differing (null-safely) are `changed`. One full-outer equi-join
-    * on the key — both sides snapshot-sized, the consumer never
-    * replays the write log. Columns: change ('added'/'removed'/
-    * 'changed') + the key + each non-key column as (old_*, new_*). */
-  def snapshotDiff(layer: String, name: String, v1: Long, v2: Long,
-      keys: Seq[String]): DataFrame = {
-    val a = readSnapshot(layer, name, Some(v1)).as("a")
-    val b = readSnapshot(layer, name, Some(v2)).as("b")
-    val nonKey = a.columns.filterNot(keys.contains).toSeq
-    val keyCond = keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-    // presence probe: a side absent from the full-outer join has every
-    // column null (keys must be non-null, as in every keyed write here)
-    val inA = col(s"a.${keys.head}").isNotNull
-    val inB = col(s"b.${keys.head}").isNotNull
-    val same = nonKey.map(c => col(s"a.$c") <=> col(s"b.$c"))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    a.join(b, keyCond, "full_outer")
-      .withColumn("change",
-        when(!inA, lit("added"))
-          .when(!inB, lit("removed"))
-          .when(!same, lit("changed")))
-      .filter(col("change").isNotNull)
-      .select((col("change") +:
-        keys.map(k => coalesce(col(s"a.$k"), col(s"b.$k")).as(k))) ++
-        nonKey.flatMap(c => Seq(col(s"a.$c").as(s"old_$c"),
-          col(s"b.$c").as(s"new_$c"))): _*)
-  }
-
-  /** Retention: drop all versions except the current one and the
-    * newest `keepLast - 1` others (plus orphans from crashed writes).
-    * Returns the dropped version numbers. */
-  def vacuumSnapshots(layer: String, name: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must be >= 1")
-    val fs = fsFor(pointerPath(layer, name))
-    val cur = snapshotVersion(layer, name)
-      .getOrElse(sys.error(s"no published snapshot for $layer.$name"))
-    // retention counts only COMMITTED versions — an uncommitted orphan
-    // from a crashed write is never worth a retention slot
-    val committed = versionsOnDisk(layer, name, fs).filter(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        versionDir(layer, name, v), "_SUCCESS")))
-    val keep = (committed.filterNot(_ == cur)
-      .takeRight(keepLast - 1) :+ cur).toSet
-    val drop = versionsOnDisk(layer, name, fs).filterNot(keep)
-    drop.foreach(v => fs.delete(versionDir(layer, name, v), true))
-    drop
   }
 
   /** S7 — DDL clone from the stored schema. */
@@ -702,45 +631,6 @@ class LayerStore(spark: SparkSession, root: String) {
     write("gold", "table_metadata", df)
   }
 
-  /** Bucketed managed table: pre-shuffles data into `buckets` files
-    * per bucket column so equi-joins/aggregations on those keys read
-    * co-located and skip the shuffle entirely (the parquet analogue of
-    * the reference's FK b-tree indexes, SURVEY §4). Lives in the
-    * session catalog (saveAsTable is required for bucket metadata). */
-  def writeBucketed(layer: String, name: String, df: DataFrame,
-    buckets: Int, cols: Seq[String]): Unit = {
-    val view = viewName(layer, name)
-    // the in-memory catalog forgets tables across JVMs but their
-    // warehouse directories persist — drop both or saveAsTable
-    // refuses with LOCATION_ALREADY_EXISTS
-    spark.sql(s"DROP TABLE IF EXISTS $view")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(s"$warehouse/$view")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, cols.head, cols.tail: _*)
-      .sortBy(cols.head, cols.tail: _*)
-      .saveAsTable(view)
-  }
-
-  def bucketedTable(layer: String, name: String): DataFrame =
-    spark.table(viewName(layer, name))
-
-  /** Partitioned layout: one directory per partition value so
-    * predicates on the partition column prune entire directories at
-    * planning time (the reference's date-index analogue; SURVEY §4 —
-    * e.g. gold dashboard partitioned by order_year_month). */
-  def writePartitioned(layer: String, name: String, df: DataFrame,
-    partitionCols: Seq[String]): Unit = {
-    // through the same stage-and-swap as every other write: a plain
-    // Overwrite deletes the target before writing, so a mid-write
-    // crash would leave neither old nor new data
-    stageSwap(layer, name, df,
-      p => df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(p))
-    ()
-  }
-
   /** S6 — batched JDBC bulk push (gold/push.py:127-163: the reference
     * pushes gold tables to a warehouse in `batchsize` chunks). Spark's
     * JDBC sink writes per-partition batched inserts — the distributed
@@ -779,8 +669,7 @@ class LayerStore(spark: SparkSession, root: String) {
     * arrive by mtime, not log position), and immune to
     * stale-resurrection (a late U below a delete's sequence number
     * hits the tombstone's watermark and is ignored). Read the live
-    * rows through [[cdcTable]]; reclaim old tombstones with
-    * [[vacuumTombstones]] once no older changes can arrive.
+    * rows through [[cdcTable]].
     * One decision join on the key (stored side pruned to keys +
     * watermark), one anti-join, batch side change-sized. Returns
     * (inserted, updated, deleted) counted on live-row transitions. */
@@ -835,168 +724,8 @@ class LayerStore(spark: SparkSession, root: String) {
     tableMerged(layer, name).filter(upper(col(opCol)) =!= "D")
       .drop(opCol, orderCol)
 
-  /** Retention for CDC tombstones: drop delete markers at or below
-    * `belowOrder` (the caller's promise that no change that old can
-    * still arrive). Live rows are never touched. Returns the number
-    * of tombstones reclaimed. */
-  def vacuumTombstones(layer: String, name: String, orderCol: String,
-      belowOrder: Long, opCol: String = "op"): Long = {
-    val old = tableMerged(layer, name)
-    val dead = upper(col(opCol)) === "D" && col(orderCol) <= belowOrder
-    val n = old.filter(dead).count()
-    if (n > 0) write(layer, name, old.filter(!dead))
-    n
-  }
-
-  /** SCD Type-2 merge (Kimball slowly-changing dimension, the
-    * HISTORY-keeping sibling of `upsert`'s latest-wins overwrite):
-    * folds an attribute snapshot batch into a stored version-history
-    * table with schema `keys ++ tracked ++ (valid_from, valid_to,
-    * is_current)`. Per key: a new key inserts an open version; a key
-    * whose tracked columns differ (null-safely) from its CURRENT
-    * version closes that version at `batchTs` and inserts the new
-    * open one; an unchanged key is untouched — so re-applying the
-    * same batch is a no-op and the op is idempotent. Keys absent
-    * from the batch keep their open version (a partial batch is not
-    * a deletion). The batch-derived q122 query is the from-scratch
-    * counterpart; an as-of join (q46/q57) probes the result.
-    * Scale: closed HISTORY rows pass through untouched (at a real
-    * deployment they'd live in closed partitions the swap never
-    * rewrites); only the entity-sized current slice joins the batch,
-    * and the decision frame is persisted so the three branch scans
-    * and the count aggregate pay the join once. Returns
-    * (newKeys, changedKeys). Batch must be key-unique — asserted,
-    * because two versions of one key in a single snapshot have no
-    * defined order. */
-  def scd2Merge(layer: String, name: String, batch: DataFrame,
-      keys: Seq[String], batchTs: java.sql.Timestamp): (Long, Long) = {
-    val tsLit = lit(batchTs).cast(TimestampType)
-    if (!exists(layer, name)) {
-      val init = batch
-        .withColumn("valid_from", tsLit)
-        .withColumn("valid_to", lit(null).cast(TimestampType))
-        .withColumn("is_current", lit(true))
-      val n = write(layer, name, init)
-      (n, 0L)
-    } else {
-      val old = tableMerged(layer, name)
-      val tracked = old.columns
-        .filterNot(keys.contains).filterNot(
-          Seq("valid_from", "valid_to", "is_current").contains).toSeq
-      require(tracked.nonEmpty,
-        s"scd2Merge on $layer.$name: no tracked columns beyond " +
-          s"${keys.mkString(",")} + SCD bookkeeping — nothing to version")
-      val cur = old.filter(col("is_current")).as("c")
-      val b = batch.select((keys ++ tracked).map(col): _*)
-        .withColumn("__b", lit(true)).as("b")
-      val keyCond = keys.map(k => col(s"c.$k") <=> col(s"b.$k")).reduce(_ && _)
-      val same = tracked.map(t => col(s"c.$t") <=> col(s"b.$t")).reduce(_ && _)
-      val j = cur.join(b, keyCond, "full_outer").persist()
-      try {
-        val both = col("c.is_current").isNotNull && col("__b").isNotNull
-        val agg = j.agg(
-          sum(when(col("c.is_current").isNull, 1L).otherwise(0L)).as("nnew"),
-          sum(when(both && !same, 1L).otherwise(0L)).as("nchg"),
-          sum(when(col("__b").isNotNull, 1L).otherwise(0L)).as("nbatch"))
-          .collect()(0)
-        val (nNew, nChg, nBatch) =
-          (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-        require(nBatch == b.drop("__b").select(keys.map(col): _*).distinct().count(),
-          s"scd2Merge batch has duplicate keys on ${keys.mkString(",")}")
-        val oldCols = old.columns.toSeq
-        val kept = j.filter(col("__b").isNull || (both && same))
-          .select(oldCols.map(c0 => col(s"c.$c0")): _*)
-        val closed = j.filter(both && !same)
-          .select(oldCols.map {
-            case "valid_to"   => tsLit.as("valid_to")
-            case "is_current" => lit(false).as("is_current")
-            case c0           => col(s"c.$c0")
-          }: _*)
-        val opened = j.filter(col("c.is_current").isNull || (both && !same))
-          .select(oldCols.map {
-            case "valid_from" => tsLit.as("valid_from")
-            case "valid_to"   => lit(null).cast(TimestampType).as("valid_to")
-            case "is_current" => lit(true).as("is_current")
-            case c0           => col(s"b.$c0")
-          }: _*)
-        val hist = old.filter(!col("is_current"))
-        write(layer, name,
-          hist.unionByName(kept).unionByName(closed).unionByName(opened))
-        (nNew, nChg)
-      } finally j.unpersist()
-    }
-  }
-
-  /** Small-files compaction: rewrite a stored table's parquet layout
-    * into ~targetFileBytes files — the maintenance every long-lived
-    * lake table needs (each append/micro-batch leaves its own files;
-    * scan planning and open() cost grow with file count until reads
-    * are metadata-bound). Routed through the same crash-safe
-    * stage-swap as every write: the rewrite reads the live files while
-    * staging, so a mid-compaction loss leaves the table untouched.
-    * Returns (filesBefore, filesAfter). Data is bit-identical — only
-    * the file layout changes. */
-  def compact(layer: String, name: String,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    recoverOrphanBackup(layer, name)
-    val target = hadoopPath(layer, name)
-    val fs = fsFor(target)
-    def parquetFiles(): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(target).filter(_.getPath.getName.endsWith(".parquet"))
-    val before = parquetFiles()
-    val nOut = math.max(1,
-      math.ceil(before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    val df = tableMerged(layer, name).repartition(nOut)
-    stageSwap(layer, name, df)
-    (before.length, parquetFiles().length)
-  }
-
-  /** Range-clustered rewrite — the layout that makes file skipping
-    * work: repartitionByRange + sortWithinPartitions on the cluster
-    * keys, so every output file covers a disjoint key range and a
-    * point/range predicate prunes to O(matching files) via parquet
-    * min/max footer stats instead of scanning the table (the
-    * single-dimension case of Z-ordering; at 100 TB this is the
-    * difference between reading one file and reading all of them for
-    * a selective filter). Routed through the same crash-safe
-    * stage-swap as every rewrite. Returns the file count. */
-  def clusterBy(layer: String, name: String, cols: Seq[String],
-      numFiles: Int): Int = {
-    require(cols.nonEmpty && numFiles >= 1)
-    val sorted = tableMerged(layer, name)
-      .repartitionByRange(numFiles, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-    stageSwap(layer, name, sorted)
-    val target = hadoopPath(layer, name)
-    fsFor(target).listStatus(target)
-      .count(_.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Schema-evolution append: new NULLABLE columns may appear in a
-    * batch (old rows read as NULL via parquet schema merge); dropped
-    * columns read as NULL for the new rows; a changed TYPE on a
-    * shared column is rejected — silent coercion corrupts readers.
-    * The table's live read must use `tableMerged` (plain parquet
-    * reads take one footer's schema). No history rewrite: evolution
-    * is a property of the READ, which is what keeps it O(batch) at
-    * scale. */
-  def appendEvolved(layer: String, name: String, df: DataFrame): Unit = {
-    recoverOrphanBackup(layer, name)
-    if (!exists(layer, name)) { write(layer, name, df); return }
-    val stored = tableMerged(layer, name).schema
-    val conflicts = df.schema.flatMap { f =>
-      stored.find(_.name == f.name).filter(_.dataType != f.dataType)
-        .map(s => s"${f.name}: stored ${s.dataType.simpleString} vs batch ${f.dataType.simpleString}")
-    }
-    require(conflicts.isEmpty,
-      s"appendEvolved type conflicts on $layer.$name — ${conflicts.mkString("; ")}")
-    df.write.mode(SaveMode.Append).parquet(path(layer, name))
-    tableMerged(layer, name).createOrReplaceTempView(viewName(layer, name))
-  }
-
-  /** Read with parquet schema merge — the companion of appendEvolved:
-    * the union schema across every file's footer, missing columns
-    * NULL-filled per row group. */
+  /** Read with parquet schema merge: the union schema across every
+    * file's footer, missing columns NULL-filled per row group. */
   def tableMerged(layer: String, name: String): DataFrame = {
     recoverOrphanBackup(layer, name)
     spark.read.option("mergeSchema", "true").parquet(path(layer, name))

@@ -18,12 +18,7 @@ import org.apache.spark.sql.functions._
 object ContainSkewLab {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(500000L)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
     def t[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body

@@ -1,18 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: call SparkEntry.entry the way the driver does and print
   * the row count. `sbt "runMain graft.tools.EntrySmoke"`. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val df = graft.SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(3, truncate = false)

@@ -1,25 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: prints the formatted physical plan of selected queries
   * and greps the signals that matter at scale — PushedFilters,
   * broadcast joins, WholeStageCodegen spans, Exchange counts.
   * `sbt "runMain graft.tools.ExplainAudit [query ...]"` */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    // env-tunable SF/cores so plan dumps can match the bench's exact
-    // configuration (broadcast-threshold decisions are size-dependent)
+    // env-tunable SF (and cores, via Session) so plan dumps can match
+    // the bench's exact configuration (broadcast-threshold decisions
+    // are size-dependent)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_monthly_sales", "q04_dashboard", "q05_topk_customers", "q30_cosine_topk")
     for (name <- names) {

@@ -1,16 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-line plan summary for every registered query: exchanges,
   * join strategies, cartesians. `sbt "runMain graft.tools.PlanSweep"` */
 object PlanSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString

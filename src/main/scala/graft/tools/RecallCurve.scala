@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement: IVF recall@1 vs scanned-candidate fraction across
@@ -8,13 +7,7 @@ import org.apache.spark.sql.functions._
   * `sbt "runMain graft.tools.RecallCurve [sfDir]"`. */
 object RecallCurve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val nQueries = 20
     val total = spark.read.parquet(s"$dir/embeddings.parquet").count()

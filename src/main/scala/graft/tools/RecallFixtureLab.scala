@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off dial-finder for the SCALING.md ANN recall fixture (the r13
   * ask: a fixture that CAN fail): sweeps the cluster-noise amplitude
   * of ScalingWitness.embsNoisy at the 1× witness scale and prints
@@ -17,13 +15,7 @@ object RecallFixtureLab {
     val n = args.lift(0).map(_.toLong).getOrElse(20000L)
     val noises = if (args.length > 1) args.drop(1).map(_.toDouble).toSeq
       else Seq(0.1, 0.2, 0.3, 0.4, 0.6)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     for (noise <- noises) {
       val dir = java.nio.file.Files.createTempDirectory(s"rfl_$noise").toString
       ScalingWitness.embsNoisy(spark, n, noise)

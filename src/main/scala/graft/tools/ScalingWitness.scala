@@ -167,13 +167,7 @@ object ScalingWitness {
   def main(args: Array[String]): Unit = {
     val baseDocs = args.lift(0).map(_.toLong).getOrElse(50000L)
     val baseVecs = args.lift(1).map(_.toLong).getOrElse(20000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val results = collection.mutable.ArrayBuffer.empty[Cell]
     val recallRows = collection.mutable.ArrayBuffer.empty[String]

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an N× scale-up of an existing testdata dir for TIMING
@@ -24,13 +24,7 @@ object SfSynth {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/sf_synth10")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def span(df: DataFrame, key: String): Long =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic: decompose kmAssignSrp's wall at the ScalingWitness 1×
@@ -13,13 +12,7 @@ object SrpAssignProfile {
     val n = args.lift(0).map(_.toLong).getOrElse(50000L)
     val k = args.lift(1).map(_.toInt).getOrElse(64)
     val rows = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     def t[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime()
       val r = body
