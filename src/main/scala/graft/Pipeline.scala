@@ -57,16 +57,16 @@ object Pipeline {
   def runSilver(spark: SparkSession, store: LayerStore, runId: String): LayerResult = timed("silver") {
     import spark.implicits._
     val entities = graft.operators.SilverLayer.buildAll(store.table("bronze", _))
-    var rows = 0L
-    val steps = entities.map { case (name, e) =>
-      val outRows = store.write("silver", name, e.clean)
-      rows += outRows
-      val rejectedRows = e.rejected.count()
-      (s"clean_$name", name, outRows + rejectedRows, outRows, rejectedRows)
-    }
-    val rejected = entities.map(_._2.rejected).reduce(_ unionByName _)
+    val outRows = entities.map { case (name, e) => store.write("silver", name, e.clean) }
+    var rows = outRows.sum
+    // each entity's reject count is observed inside the one
+    // rejected_rows write instead of a count() of its own
+    val rejected = entities.map { case (_, e) => LayerStore.counted(e.rejected) }
     store.write("audit", "rejected_rows",
-      rejected.withColumn("run_id", lit(runId)))
+      rejected.map(_._1).reduce(_ unionByName _).withColumn("run_id", lit(runId)))
+    val steps = entities.map(_._1).zip(outRows).zip(rejected.map(_._2())).map {
+      case ((name, out), rej) => (s"clean_$name", name, out + rej, out, rej)
+    }
     store.write("silver", "quality_issues_log",
       entities.map(_._2.issues)
         .foldLeft(graft.operators.SilverLayer.emptyIssues(spark))(_ unionByName _))

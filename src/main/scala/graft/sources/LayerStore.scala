@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -293,7 +293,10 @@ class LayerStore(spark: SparkSession, root: String) {
     * crash window leaves the old table at .bak (recoverable), never
     * lost. This is the table-level analogue of Spark's task-level
     * commit protocol, and the property SaveMode.Overwrite alone does
-    * NOT give you (it deletes the target before writing). */
+    * NOT give you (it deletes the target before writing).
+    * One Spark action: the row count is observed inside the write, and
+    * the promoted table's schema is `df`'s, so registering the view
+    * reads nothing back. */
   private def stageSwap(layer: String, name: String, df: DataFrame): Long = {
     recoverOrphanBackup(layer, name)
     val target = hadoopPath(layer, name)
@@ -301,7 +304,8 @@ class LayerStore(spark: SparkSession, root: String) {
     val backup = hadoopPath(layer, name, ".__bak__")
     val fs = fsFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val (counted, rows) = LayerStore.counted(df)
+    counted.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     if (fs.exists(backup)) fs.delete(backup, true)
     if (fs.exists(target) && !fs.rename(target, backup))
       sys.error(s"stage-swap: cannot move $target aside")
@@ -310,9 +314,10 @@ class LayerStore(spark: SparkSession, root: String) {
       sys.error(s"stage-swap: cannot promote $staging to $target")
     }
     fs.delete(backup, true)
-    val back = table(layer, name)
-    back.createOrReplaceTempView(viewName(layer, name))
-    back.count()
+    val m = fs.getFileStatus(target).getModificationTime
+    Seq(false, true).foreach(merged => schemas.put((path(layer, name), merged), (m, df.schema)))
+    table(layer, name).createOrReplaceTempView(viewName(layer, name))
+    rows()
   }
 
   /** S4/S5 — full-refresh write (CTAS / TRUNCATE-reload semantics) +
@@ -330,6 +335,7 @@ class LayerStore(spark: SparkSession, root: String) {
     * would delete the orphan — silent loss. */
   def append(layer: String, name: String, df: DataFrame): Unit = {
     recoverOrphanBackup(layer, name)
+    Seq(false, true).foreach(merged => schemas.remove((path(layer, name), merged)))
     df.write.mode(SaveMode.Append).parquet(path(layer, name))
     table(layer, name).createOrReplaceTempView(viewName(layer, name))
   }
@@ -381,9 +387,10 @@ class LayerStore(spark: SparkSession, root: String) {
     * rows on `keys`; within the incoming batch the highest `orderCol`
     * wins. Stage-and-swap (idempotent, like the reference's re-runnable
     * loads): the merge reads the live table while writing the staging
-    * dir, so no persist/checkpoint of the full table is needed and the
-    * live table survives any mid-write failure. Returns (inserted,
-    * updated) counts like the reference's before/after accounting. */
+    * dir, so no checkpoint of the full table is needed and the live
+    * table survives any mid-write failure. Returns (inserted, updated)
+    * counts like the reference's before/after accounting, all observed
+    * inside the one write. */
   def upsert(layer: String, name: String, incoming: DataFrame,
     keys: Seq[String], orderCol: String): (Long, Long) = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).desc)
@@ -393,23 +400,25 @@ class LayerStore(spark: SparkSession, root: String) {
       val n = write(layer, name, latest)
       (n, 0L)
     } else {
-      val old = tableMerged(layer, name)
-      val oldCount = old.count()
-      val latestCount = latest.persist().count() // incoming batch, small
+      // cached lazily: the anti-join's key side and the union both read
+      // the incoming batch (small), so the window runs once
+      latest.persist()
       try {
+        val old = tableMerged(layer, name)
+        val (oldCounted, oldRows) = LayerStore.counted(old)
         // re-select the stored order: a USING-style anti-join moves the
         // key columns to the front, which for composite keys whose
         // columns aren't leading (lineitem's l_linenumber) would
         // silently reorder the table's schema on every re-load
-        val kept = old.join(latest.select(keys.map(col): _*).distinct(),
-          keys, "left_anti")
-          .select(old.columns.map(col): _*)
-        // counts derive from totals — no separate materialization of the
-        // anti-join just to count it: inserted = growth, updated = the
-        // incoming rows that did not grow the table
+        val (kept, keptRows) = LayerStore.counted(
+          oldCounted.join(latest.select(keys.map(col): _*).distinct(), keys, "left_anti")
+            .select(old.columns.map(col): _*))
+        // both counters sit on the store's side of the merge: `incoming`
+        // may belong to another session (a foreachBatch micro-batch), and
+        // the write runs in kept's. inserted = growth, updated = the
+        // stored rows the batch replaced
         val total = write(layer, name, kept.unionByName(latest))
-        val inserted = total - oldCount
-        (inserted, latestCount - inserted) // (inserted, updated)
+        (total - oldRows(), oldRows() - keptRows()) // (inserted, updated)
       } finally latest.unpersist() // also on write failure, or each failed
       // streaming micro-batch would pin one more batch in the block manager
     }
@@ -475,9 +484,37 @@ class LayerStore(spark: SparkSession, root: String) {
     write(layer, name, merged)
   }
 
-  def table(layer: String, name: String): DataFrame = {
+  def table(layer: String, name: String): DataFrame = read(layer, name, merged = false)
+
+  /** (table path, merged?) → (directory mtime, schema) of the tables
+    * this store wrote or read. A read passes the schema instead of
+    * inferring it (a Spark job per read) while the directory's mtime
+    * still matches; any file created, deleted or renamed in it — by
+    * this store or another on the same root — moves the mtime and the
+    * next read infers again. stageSwap fills both entries from the
+    * frame it wrote, table() and tableMerged() fill theirs on first
+    * inference, and append drops them (its files may add columns).
+    * Not seen: a data file rewritten in place with another schema. */
+  private val schemas =
+    collection.concurrent.TrieMap.empty[(String, Boolean), (Long, StructType)]
+
+  private def read(layer: String, name: String, merged: Boolean): DataFrame = {
     recoverOrphanBackup(layer, name)
-    spark.read.parquet(path(layer, name))
+    val p = path(layer, name)
+    val reader = if (merged) spark.read.option("mergeSchema", "true") else spark.read
+    val dir = hadoopPath(layer, name)
+    val fs = fsFor(dir)
+    if (!fs.exists(dir)) reader.parquet(p) // Spark's own "path does not exist"
+    else {
+      val m = fs.getFileStatus(dir).getModificationTime
+      schemas.get((p, merged)) match {
+        case Some((`m`, s)) => reader.schema(s).parquet(p)
+        case _ =>
+          val df = reader.parquet(p)
+          schemas.put((p, merged), (m, df.schema))
+          df
+      }
+    }
   }
 
   // ---- snapshot-versioned tables (time travel) ----------------------
@@ -726,10 +763,7 @@ class LayerStore(spark: SparkSession, root: String) {
 
   /** Read with parquet schema merge: the union schema across every
     * file's footer, missing columns NULL-filled per row group. */
-  def tableMerged(layer: String, name: String): DataFrame = {
-    recoverOrphanBackup(layer, name)
-    spark.read.option("mergeSchema", "true").parquet(path(layer, name))
-  }
+  def tableMerged(layer: String, name: String): DataFrame = read(layer, name, merged = true)
 
   /** S12 — CSV export with header. */
   def exportCsv(df: DataFrame, out: String): Unit =
@@ -764,5 +798,20 @@ class LayerStore(spark: SparkSession, root: String) {
     def p(l: String) = new Path(s"$root/$l")
     layers.reverse.foreach(l => fsFor(p(l)).delete(p(l), true))
     layers.forall(l => !fsFor(p(l)).exists(p(l)))
+  }
+}
+
+object LayerStore {
+
+  /** `df` with a row counter that the next action over it fills in, so
+    * the count costs no Spark job of its own. Call the thunk only after
+    * that action succeeded, and run the action in `df`'s session:
+    * Spark fills an observation only from actions of the session that
+    * registered it, so the thunk fails after a bounded wait instead of
+    * blocking forever on a counter no action filled. */
+  def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("rows")), () => scala.concurrent.Await.result(
+      o.future, scala.concurrent.duration.Duration(5, "min")).getLong(0))
   }
 }

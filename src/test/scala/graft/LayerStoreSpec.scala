@@ -138,6 +138,67 @@ class LayerStoreSpec extends SparkSpec {
     assert(store.table("silver", "t").count() == 2)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/silver/t.__bak__")))
+    // the failed write's row counter is not carried into the next write
+    assert(store.write("silver", "t", Seq((3L, "x"), (4L, "y"), (5L, "z")).toDF("id", "v")) == 3)
+    assert(store.table("silver", "t").count() == 3)
+  }
+
+  test("schema map: a read after a write sees the schema parquet infers") {
+    import org.apache.spark.sql.types._
+    val (store, dir) = freshStore()
+    // non-nullable, decimal, array and nested columns: the frame's own
+    // schema differs from the stored one in nullability only
+    val df = Seq((1L, "a", Seq(1, 2)), (2L, "b", Seq.empty[Int])).toDF("id", "v", "xs")
+      .withColumn("amount", lit(BigDecimal("1.50")).cast(DecimalType(12, 2)))
+      .withColumn("s", struct(col("id").as("k"), lit(1.5).as("w")))
+    assert(store.write("silver", "t", df) == 2)
+    val inferred = spark.read.parquet(s"$dir/silver/t").schema
+    assert(store.table("silver", "t").schema == inferred)
+    assert(store.tableMerged("silver", "t").schema == inferred)
+    assert(spark.table("silver_t").schema == inferred)
+  }
+
+  test("schema map: another store's rewrite with a new column is seen") {
+    val (store, dir) = freshStore()
+    store.write("silver", "t", Seq((1L, "a")).toDF("id", "v"))
+    assert(store.table("silver", "t").columns.toSeq == Seq("id", "v"))
+    val other = new LayerStore(spark, dir)
+    assert(other.write("silver", "t", Seq((1L, "a", 7), (2L, "b", 8)).toDF("id", "v", "w")) == 2)
+    assert(store.table("silver", "t").columns.toSeq == Seq("id", "v", "w"))
+    assert(store.tableMerged("silver", "t").columns.toSeq == Seq("id", "v", "w"))
+    assert(store.table("silver", "t").select("w").as[Int].collect().sorted.toSeq == Seq(7, 8))
+  }
+
+  test("schema map: an append with an extra column shows through tableMerged") {
+    val (store, _) = freshStore()
+    store.write("audit", "log", Seq((1L, "a")).toDF("id", "v"))
+    assert(store.tableMerged("audit", "log").columns.toSeq == Seq("id", "v"))
+    store.append("audit", "log", Seq((2L, "b", "boom")).toDF("id", "v", "error"))
+    val merged = store.tableMerged("audit", "log")
+    assert(merged.columns.toSeq == Seq("id", "v", "error"))
+    assert(merged.orderBy("id").select("error").collect().map(r => Option(r.getString(0))).toSeq ==
+      Seq(None, Some("boom")))
+  }
+
+  test("an empty frame writes 0 rows without blocking on its row counter") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (store, _) = freshStore()
+    val empties = Seq(
+      "local" -> Seq.empty[(Long, String)].toDF("id", "v"),
+      "range" -> spark.range(0).toDF("id"),
+      "limit" -> Seq((1L, "a")).toDF("id", "v").limit(0))
+    for ((name, df) <- empties) {
+      assert(Await.result(Future(store.write("silver", name, df)), 2.minutes) == 0L, name)
+      assert(store.table("silver", name).count() == 0, name)
+    }
+    // an empty batch upserted onto a stored table: nothing inserted or updated
+    store.write("bronze", "t", Seq((1L, "a", 1L)).toDF("id", "v", "ver"))
+    val none = Seq.empty[(Long, String, Long)].toDF("id", "v", "ver")
+    assert(Await.result(Future(store.upsert("bronze", "t", none, Seq("id"), "ver")),
+      2.minutes) == ((0L, 0L)))
+    assert(store.table("bronze", "t").count() == 1)
   }
 
   test("orphaned backup from a crash mid-swap is recovered, not destroyed") {

@@ -1,22 +1,90 @@
 package graft
 
 import graft.sources.LayerStore
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** End-to-end twin of the reference's `etl.py --layer all`: one full
   * bronze→silver→gold run on sf0.001 into a temp store, then a second
   * run to prove idempotency (upsert bronze, full-refresh silver/gold,
   * run-scoped forecasts). */
 class PipelineSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
 
   private lazy val root =
     java.nio.file.Files.createTempDirectory("pipeline_spec").toString
-  private lazy val results = Pipeline.run(spark, sf0001, root)
+  /** (job id, SQL execution id) of every job from the shared run on,
+    * and each SQL execution's physical plan text. */
+  private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
+  private val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+  private lazy val results = {
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(j.jobId -> Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.put(x.executionId, x.physicalPlanDescription)
+        case _ =>
+      }
+    })
+    Pipeline.run(spark, sf0001, root)
+  }
   private lazy val store = new LayerStore(spark, root)
 
   test("all three layers succeed") {
     assert(results.map(r => r.layer -> r.ok) ==
       Seq("bronze" -> true, "silver" -> true, "gold" -> true))
     assert(results.forall(_.rows > 0))
+  }
+
+  test("bronze + silver run one Spark action per write; counts match the tables") {
+    import org.apache.spark.sql.functions.col
+    results
+    // runSilver's last action writes silver.region: every job up to
+    // that write's last one is a bronze or silver job (both layers run
+    // their jobs on the caller's thread, in order)
+    def lastSilverJob: Option[Int] = {
+      val exec = plans.asScala.collect {
+        case (id, plan) if plan.contains(s"$root/silver/region.__staging__") => id
+      }.minOption // the shared run's, not the re-run's
+      exec.flatMap(e => jobs.asScala.filter(_._2 == e).map(_._1).maxOption)
+    }
+    val deadline = System.nanoTime() + 60e9.toLong // listener events arrive asynchronously
+    while (!lastSilverJob.exists(b => jobs.asScala.exists(_._1 > b)) && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    val boundary = lastSilverJob.getOrElse(fail("no job wrote silver.region"))
+    val bronzeSilverJobs = jobs.asScala.count(_._1 <= boundary)
+    // 165 before: a schema-inference job per table read, two read-back
+    // count jobs per write, a count job per entity's rejected rows
+    assert(bronzeSilverJobs <= 60, s"$bronzeSilverJobs jobs")
+    // row totals reported by the layers are the rows the tables hold
+    def rows(layer: String, tables: Seq[String]) = tables.map(store.table(layer, _).count()).sum
+    val entities = Seq("suppliers", "warehouses", "retail_stores", "products", "inventory",
+      "supply_orders")
+    val byLayer = results.map(r => r.layer -> r.rows).toMap
+    assert(byLayer("bronze") == rows("bronze", Tables.names))
+    assert(byLayer("silver") == rows("silver", entities ++ Seq("orders", "lineitem", "part",
+      "customer", "supplier", "nation", "region")))
+    assert(byLayer("gold") == rows("gold", Seq("monthly_sales", "inventory_health",
+      "supplier_monthly", "dashboard", "forecasts", "forecast_metrics", "model_selection")))
+    // audit.etl_steps: the counts the tables hold, and the values the
+    // per-entity count() actions recorded before
+    val steps = store.table("audit", "etl_steps").orderBy("table_name")
+      .select("step_executed", "table_name", "input_count", "output_count", "rejected_count")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    val rejected = store.table("audit", "rejected_rows")
+    steps.foreach { case (_, t, in, out, rej) =>
+      assert(out == store.table("silver", t).count(), t)
+      assert(rej == rejected.filter(col("table_name") === t).count(), t)
+      assert(in == out + rej, t)
+    }
+    assert(steps.toSeq == Seq(
+      ("clean_inventory", "inventory", 1812L, 1812L, 0L),
+      ("clean_products", "products", 200L, 200L, 0L),
+      ("clean_retail_stores", "retail_stores", 150L, 150L, 0L),
+      ("clean_suppliers", "suppliers", 10L, 10L, 0L),
+      ("clean_supply_orders", "supply_orders", 4599L, 4599L, 0L),
+      ("clean_warehouses", "warehouses", 25L, 25L, 0L)))
   }
 
   test("every layer table exists with rows") {
